@@ -699,11 +699,12 @@ object Dedup {
       // neighbor step extends the known horizon h to h+1, each jump
       // through the old labels adds another h — 4h+1 per round instead of
       // 2h+1, and with the seeded start (h₀=1) a 500-link min-chain
-      // converges in 6 rounds instead of 10 (ChainProbe-measured; q88
-      // dropped 165→150 jobs). Each saved round is a full edges×labels
-      // shuffle pass at scale; the extra jumps re-join the (much smaller,
-      // usually broadcast) label frame, and reuse its one broadcast, so
-      // they add no exchange and no job per round.
+      // converges in 6 rounds instead of 10 (500-link chain 10 → 6 rounds,
+      // OPTIMIZATION_r16.md; q88 dropped 165→150 jobs). Each saved round
+      // is a full edges×labels shuffle pass at scale; the extra jumps
+      // re-join the (much smaller, usually broadcast) label frame, and
+      // reuse its one broadcast, so they add no exchange and no job per
+      // round.
       val parents = labels
         .select(col("doc_id").as("component"), col("component").as("parent"))
       val jumped =

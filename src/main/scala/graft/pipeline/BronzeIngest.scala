@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Raw → bronze ingest, reproducing `spark_jobs/batch_etl.py` semantics as
@@ -14,15 +14,11 @@ import org.apache.spark.sql.functions._
   *    (`batch_etl.py:46-54`): derive from the timestamp column if present,
   *    else re-cast an existing date column, else fail the contract.
   *  - P3 keep-set pruning (`batch_etl.py:57-62`).
-  *  - K1 hive-partitioned parquet write after an explicit round-robin
-  *    repartition (`batch_etl.py:70,76-81`).
-  *
-  * At 100 TB: the write partitions by low-cardinality `event_date`, so each
-  * of the `targetPartitions` tasks appends to at most |dates| files; for
-  * heavily skewed days switch the repartition to
-  * `repartition(n, col(partitionColumn))` (the reference's commented
-  * alternative, `batch_etl.py:72-73`) so dynamic partition pruning and
-  * per-date file locality hold downstream.
+  *  - K1 hive-partitioned parquet write after a repartition on the
+  *    partition columns (the reference's `repartition(col)` alternative,
+  *    `batch_etl.py:72-73`): each date is written by one task as one file,
+  *    so bronze holds one file per partition, whatever `targetPartitions`
+  *    is. `maxRecordsPerFile` splits a date that outgrows the cap.
   */
 object BronzeIngest {
 
@@ -70,27 +66,27 @@ object BronzeIngest {
       }
     }
 
-  /** K1: hive-partitioned parquet write. Round-robin repartition (the
-    * reference default) maximizes write parallelism but each of the N tasks
-    * appends to every open partition (N×|dates| files); repartitioning on
-    * the partition columns writes one file per partition — fewer, larger
-    * files and cheaper commits, at the cost of skew on hot dates (pair with
-    * `maxRecordsPerFile` to re-split those).
+  /** K1: repartition on the partition columns, then a hive-partitioned
+    * parquet write, so each partition is one file (`maxRecordsPerFile`,
+    * a writer option that leaves the session conf alone, splits a skewed
+    * date into more). Returns the rows written.
+    *
+    * A write of no rows leaves no part file, and with it no schema for
+    * silver to read; one empty file at the root then carries the schema.
     */
-  def write(df: DataFrame, cfg: PipelineConfig): Unit = {
-    df.sparkSession.conf.set("spark.sql.files.maxRecordsPerFile", cfg.maxRecordsPerFile)
-    val repartitioned =
-      if (cfg.repartitionByPartitionCols)
-        df.repartition(cfg.targetPartitions, cfg.partitionColumns.map(col): _*)
-      else df.repartition(cfg.targetPartitions)
-    repartitioned
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy(cfg.partitionColumns: _*)
-      .parquet(cfg.bronzePath)
+  def write(df: DataFrame, cfg: PipelineConfig): Long = {
+    val rows = writeCounted(df.repartition(cfg.targetPartitions, cfg.partitionColumns.map(col): _*)) {
+      _.mode(SaveMode.Overwrite)
+        .option("maxRecordsPerFile", cfg.maxRecordsPerFile)
+        .partitionBy(cfg.partitionColumns: _*)
+        .parquet(cfg.bronzePath)
+    }
+    if (rows == 0) df.limit(0).write.mode(SaveMode.Overwrite).parquet(cfg.bronzePath)
+    rows
   }
 
   /** Whole stage: raw events → transform → partitioned bronze. Returns
-    * (rowCount, outputPartitions) as stage metrics (`batch_etl.py:65-66`
+    * (rows written, outputPartitions) as stage metrics (`batch_etl.py:65-66`
     * logs the same two numbers).
     */
   def run(raw: DataFrame, cfg: PipelineConfig): Map[String, Long] = {
@@ -98,8 +94,6 @@ object BronzeIngest {
     val bronze = raw.transform(normalizeColumns)
       .transform(derivePartitionColumns("ts", cfg.partitionColumns))
       .transform(prune(keep ++ cfg.partitionColumns))
-    val n = bronze.count()
-    write(bronze, cfg)
-    Map("rows" -> n, "partitions" -> cfg.targetPartitions.toLong)
+    Map("rows" -> write(bronze, cfg), "partitions" -> cfg.targetPartitions.toLong)
   }
 }

@@ -20,13 +20,15 @@ final case class PipelineConfig(
     silverPath: String,
     artifactsDir: String,
     logsDir: String,
-    /** bronze output tasks/files (`batch_etl.py:10`) */
+    /** bronze write tasks (`batch_etl.py:10`); bronze is repartitioned on
+      * `partitionColumns`, so it holds one file per partition, not per task */
     targetPartitions: Int = 16,
     /** `spark.sql.shuffle.partitions` (`batch_etl.py:11`) */
     shufflePartitions: Int = 16,
     /** `spark.sql.files.maxPartitionBytes` (`batch_etl.py:12`) */
     maxPartitionBytes: String = "64m",
-    /** `spark.sql.files.maxRecordsPerFile`, 0 = off (`batch_etl.py:13`) */
+    /** bronze rows-per-file cap, 0 = off (`batch_etl.py:13`); a writer
+      * option, not a session conf, so later writes are not capped */
     maxRecordsPerFile: Long = 0L,
     /** silver save mode: overwrite|append (`write_silver.py:10`) */
     silverMode: String = "overwrite",
@@ -36,12 +38,6 @@ final case class PipelineConfig(
       * legacy tests expect a `year=`/`month=` layout — `test_batch_etl.py:7-11`
       * — supported via Seq("year","month")) */
     partitionColumns: Seq[String] = Seq("event_date"),
-    /** repartition by the partition columns before the bronze write (the
-      * reference's commented alternative, `batch_etl.py:72-73`): one task
-      * per hive partition → one file each, vs round-robin's
-      * tasks×partitions file blowup. Round-robin (false) stays the
-      * reference default. */
-    repartitionByPartitionCols: Boolean = false,
     thresholds: DqThresholds = DqThresholds(),
     /** DQ failure → warn instead of non-zero exit (`dq_checks.py:24`) */
     warnOnly: Boolean = false,

@@ -49,29 +49,18 @@ object GoldAggregate {
                |      ELSE -((2 * -micros + 100 * n_events) DIV (200 * n_events)) END) / 10000.0D""".stripMargin)
           .as("avg_value"))
 
-  /** Write gold from the silver path; returns stage metrics for the Runner. */
+  /** Write gold from the silver path; returns this run's `gold_rows`. */
   def run(spark: SparkSession, cfg: PipelineConfig): Map[String, Long] = {
-    val silver = spark.read.parquet(cfg.silverPath)
-    // persist the (tiny, aggregated) gold frame so the write and the metric
-    // count share ONE scan+shuffle of silver instead of recomputing it
-    val gold = dailySummary(silver).persist()
-    try {
-      writeAndCount(gold, cfg)
-    } finally gold.unpersist()
-  }
-
-  private def writeAndCount(gold: DataFrame, cfg: PipelineConfig): Map[String, Long] = {
-    gold.write
-      .mode(cfg.silverMode)
-      // dynamic: an overwrite run replaces only the event_date partitions
-      // present in this run's silver — without it, overwrite+partitionBy
-      // truncates the whole gold table, losing every date an incremental
-      // run didn't re-process
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("event_date")
-      .parquet(cfg.goldPath)
-    // metric = THIS run's rows (a read-back count would report the whole
-    // historical table under append mode); the aggregate is tiny
-    Map("gold_rows" -> gold.count())
+    val gold = dailySummary(spark.read.parquet(cfg.silverPath))
+    Map("gold_rows" -> writeCounted(gold) {
+      _.mode(cfg.silverMode)
+        // dynamic: an overwrite run replaces only the event_date partitions
+        // present in this run's silver — without it, overwrite+partitionBy
+        // truncates the whole gold table, losing every date an incremental
+        // run didn't re-process
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("event_date")
+        .parquet(cfg.goldPath)
+    })
   }
 }

@@ -40,12 +40,11 @@ object SilverClean {
   def transform(df: DataFrame): DataFrame =
     df.transform(trimStrings).transform(dropInternal).transform(addAudit)
 
+  /** Returns this run's rows written, also under append mode. */
   def run(spark: SparkSession, cfg: PipelineConfig): Map[String, Long] = {
-    val bronze = spark.read.parquet(cfg.bronzePath)
-    val silver = transform(bronze)
-    silver.coalesce(cfg.silverPartitions)
-      .write.mode(cfg.silverMode)
-      .parquet(cfg.silverPath)
-    Map("rows" -> spark.read.parquet(cfg.silverPath).count())
+    val silver = transform(spark.read.parquet(cfg.bronzePath))
+    Map("rows" -> writeCounted(silver.coalesce(cfg.silverPartitions)) {
+      _.mode(cfg.silverMode).parquet(cfg.silverPath)
+    })
   }
 }

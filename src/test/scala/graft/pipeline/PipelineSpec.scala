@@ -20,6 +20,12 @@ class PipelineSpec extends AnyFunSuite {
       silverPartitions = 2)
   }
 
+  /** parquet part files in each `event_date=` directory under `path`. */
+  private def partFilesPerDate(path: String): Map[String, Int] =
+    new java.io.File(path).listFiles().filter(_.getName.startsWith("event_date="))
+      .map(d => d.getName -> d.list().count(f => f.startsWith("part-") && f.endsWith(".parquet")))
+      .toMap
+
   test("normalizeName matches reference semantics (batch_etl.py:43)") {
     assert(BronzeIngest.normalizeName("  Tpep Pickup Datetime ") == "tpep_pickup_datetime")
     assert(BronzeIngest.normalizeName("already_ok") == "already_ok")
@@ -49,10 +55,24 @@ class PipelineSpec extends AnyFunSuite {
     assert(metrics("rows") == 1000L)
     val dirs = new java.io.File(cfg.bronzePath).listFiles().map(_.getName)
     assert(dirs.count(_.startsWith("event_date=")) > 5)
+    // repartitioned on the date: one file per date, not one per task
+    val perDate = partFilesPerDate(cfg.bronzePath)
+    assert(perDate.values.forall(_ == 1), perDate)
     // round-trip: partition column survives and rows are intact
     val back = spark.read.parquet(cfg.bronzePath)
     assert(back.count() == 1000L)
     assert(back.columns.contains("event_date"))
+  }
+
+  test("bronze maxRecordsPerFile splits dates without touching the session conf") {
+    val key = "spark.sql.files.maxRecordsPerFile"
+    val before = spark.conf.getOption(key)
+    // below the busiest sf0.001 date (50 rows), so that date must split
+    val cfg = tmpCfg().copy(maxRecordsPerFile = 20L)
+    assert(BronzeIngest.run(graft.Tables.events(spark, cfg.rawPath), cfg)("rows") == 1000L)
+    assert(spark.conf.getOption(key) == before)
+    assert(partFilesPerDate(cfg.bronzePath).values.exists(_ >= 2))
+    assert(spark.read.parquet(cfg.bronzePath).count() == 1000L)
   }
 
   test("bronze partition layout enables partition pruning (batch_etl.py:75 'good for pruning')") {
@@ -66,6 +86,14 @@ class PipelineSpec extends AnyFunSuite {
     // the pruned scan must touch exactly the one partition's rows
     assert(pruned.count() == graft.Tables.events(spark, cfg.rawPath)
       .filter(to_date(col("ts")) === "2024-01-05").count())
+  }
+
+  test("silver reports this run's rows under append mode") {
+    val cfg = tmpCfg().copy(silverMode = "append")
+    BronzeIngest.run(graft.Tables.events(spark, cfg.rawPath), cfg)
+    assert(SilverClean.run(spark, cfg)("rows") == 1000L)
+    assert(SilverClean.run(spark, cfg)("rows") == 1000L)
+    assert(spark.read.parquet(cfg.silverPath).count() == 2000L)
   }
 
   test("silver trims strings, drops _cols, adds audit (write_silver.py:26-36)") {
@@ -183,6 +211,21 @@ class PipelineSpec extends AnyFunSuite {
     assert(badOutcome.stages.map(_.name) == Seq("bronze", "silver", "dq"))
     assert(badOutcome.exitCode(warnOnly = false) == 2) // DQ code not masked
     assert(!new java.io.File(cfgBad.goldPath).exists())
+  }
+
+  test("full runner over an empty raw input reports zero rows at every stage") {
+    val raw = Files.createTempDirectory("graft_empty_raw").toString
+    graft.Tables.events(spark, sf0001).filter(lit(false))
+      .write.parquet(s"$raw/events.parquet")
+    val cfg = tmpCfg().copy(rawPath = raw, writeGold = true)
+    val outcome = Runner.run(spark, cfg)
+    assert(outcome.failedStage.isEmpty, outcome.stages.map(s => s.logPath))
+    assert(outcome.stages.map(_.name) == Seq("bronze", "silver", "dq", "gold"))
+    val m = outcome.stages.map(s => s.name -> s.metrics).toMap
+    assert(m("bronze")("rows") == 0L)
+    assert(m("silver")("rows") == 0L)
+    assert(m("dq")("total") == 0L)
+    assert(m("gold")("gold_rows") == 0L)
   }
 
   test("single-stage runs compose into the full pipeline (O3 DAG task boundaries)") {
