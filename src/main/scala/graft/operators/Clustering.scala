@@ -57,7 +57,7 @@ object Clustering {
   /** [[assign]] over a prepared (vec_id, v) frame — the checkpointed-
     * corpus entry point of [[fitCentroids]].
     */
-  private def assignOn(prepared: DataFrame, cs: Seq[Seq[Double]]): DataFrame =
+  private[operators] def assignOn(prepared: DataFrame, cs: Seq[Seq[Double]]): DataFrame =
     // ONE CentroidCodes expression over the whole vector (single
     // subspace, raw-dot rule) instead of k scored structs under a
     // greatest() — same argmax, same lowest-id tie-break, same dot
@@ -94,7 +94,7 @@ object Clustering {
   def assignL2(emb: DataFrame, cs: Seq[Seq[Double]]): DataFrame =
     assignL2On(vecsOf(emb), cs)
 
-  private def assignL2On(prepared: DataFrame, cs: Seq[Seq[Double]]): DataFrame =
+  private[operators] def assignL2On(prepared: DataFrame, cs: Seq[Seq[Double]]): DataFrame =
     // single-subspace CentroidCodes under the L2 rule — same argmax and
     // tie-break as greatest(scoredL2), one expression node (r16)
     prepared.withColumn("cluster_id",
@@ -139,7 +139,8 @@ object Clustering {
 
   /** [[fitCentroids]] over a PREPARED (vec_id, v: array<double>) frame —
     * the index-refit entry point (Pq.refitIvfPqIndex fits the coarse
-    * quantizer from the stored `_vecs` table, which already carries v).
+    * quantizer from the stored `_vecs` table, read back widened by
+    * `IndexOps.readVecs`).
     */
   private[operators] def fitCentroidsOn(prepared: DataFrame, k: Int = 16,
       dim: Int = 64, iters: Int = 3, seed: Long = 11L): Seq[Seq[Double]] = {

@@ -59,6 +59,34 @@ object IndexOps {
   /** The embedding families' tombstone schema (keyCol = vec_id). */
   val TombstoneSchema: StructType = tombstoneSchema("vec_id")
 
+  /** STORED VECTOR PRECISION: every stored vector table (`<prefix>_vecs`,
+    * SemDedup's `_members`) keeps the SOURCE `array<float>` in its `v`
+    * column — half the bytes of the widened copy, and no information
+    * lost, since float→double is exact. Values are widened here and
+    * only here: `embedding` (the source float) gains `v` =
+    * asDouble(embedding), the array<double> every scorer consumes
+    * (VecDot / CentroidCodes reject anything else at analysis). Slices
+    * write `embedding` back as the stored `v`, never a computed double,
+    * so a build, a stream append and a refit rewrite all store the
+    * source bits and every probe's scores stay bit-identical.
+    */
+  def widened(df: DataFrame): DataFrame =
+    df.withColumn("v", graft.functions.VectorFunctions.asDouble(col("embedding")))
+
+  /** A stored vector table read back in the [[widened]] shape: the
+    * stored float `v` as `embedding` (what a rewrite writes again) plus
+    * the widened `v` — the one reader every stored probe, monitor and
+    * refit goes through.
+    */
+  def readVecs(spark: SparkSession, table: String): DataFrame =
+    widened(spark.table(table).withColumnRenamed("v", "embedding"))
+
+  /** A raw (vec_id, embedding, …) corpus as a fanned-out [[widened]]
+    * build frame — the seed slice of every stored vector index.
+    */
+  def widenedSource(emb: DataFrame): DataFrame =
+    widened(Par.fanOut(emb.select(col("vec_id"), col("embedding"))))
+
   /** Staleness-monitor schema (PQ families): one row per maintenance
     * batch with the delta's quantization MSE vs the build-time MSE
     * recorded in meta (both exact int64 micros) PLUS the coverage

@@ -379,8 +379,9 @@ object Pq {
   /** Exact re-rank of a bounded (anchor_id, vec_id, adc_score) candidate
     * set (see [[adcTopK]]'s rationale) over a PREPARED (vec_id,
     * v: array<double>) frame — the raw-embedding projection or the
-    * stored `_vecs` table: candidates and anchors broadcast, one exact
-    * dot per survivor, per-anchor top-k on true scores.
+    * stored `_vecs` table widened by `IndexOps.readVecs`: candidates and
+    * anchors broadcast, one exact dot per survivor, per-anchor top-k on
+    * true scores.
     */
   private def exactRerankBatch(vecs: DataFrame, anchors: DataFrame, k: Int)(
       cand: DataFrame): DataFrame = {
@@ -502,13 +503,15 @@ object Pq {
   // the codebooks and re-encodes the corpus on EVERY invocation; the
   // production shape fits + encodes ONCE (the expensive pass over the
   // raw vectors) and every retrieval batch scans only the stored 8-byte
-  // code rows: `<prefix>_codes` + `<prefix>_vecs` (exact-re-rank side),
+  // code rows: `<prefix>_codes` + `<prefix>_vecs` (exact-re-rank side,
+  // the source array<float> widened on read by IndexOps.readVecs),
   // bucketed+partitioned by batch_id (`sources.Bucketing`, incremental
   // growth via streaming.AnnStream's discipline), and `<prefix>_meta`
   // holding the FITTED CODEBOOKS — doubles round-trip bit-exactly
-  // through parquet, so the stored path's ADC scores (and therefore its
-  // results) are IDENTICAL to the recompute path's (PqSpec pins row
-  // equality + the zero-corpus-exchange probe plan).
+  // through parquet and float→double widening is exact, so the stored
+  // path's ADC scores (and therefore its results) are IDENTICAL to the
+  // recompute path's (PqSpec pins row equality + the
+  // zero-corpus-exchange probe plan).
   // ---------------------------------------------------------------------
 
   /** Stored-PQ-index layout marker (DecontamStream discipline). Format 2
@@ -518,9 +521,10 @@ object Pq {
     * (`tail_ppm` / `tail_bar_ppm` / `tail_alert` — see
     * [[graft.operators.IndexOps.MonitorSchema]]). A stale-format index
     * would silently resurrect deleted vectors / fail monitor appends, so
-    * it must rebuild.
+    * it must rebuild. Format 4 stores `_vecs.v` as the source
+    * array<float> (see [[IndexOps.widened]]).
     */
-  val PqIndexFormat = 3
+  val PqIndexFormat = 4
 
   /** Staleness alert bar: a maintenance batch whose quantization MSE
     * exceeds this multiple of the BUILD-time MSE signals that the frozen
@@ -575,16 +579,19 @@ object Pq {
   private def buildMseMicros(e: DataFrame, cbs: Seq[Seq[Seq[Double]]]): Long =
     quantMseMicros(e, cbs).collect()(0).getLong(1)
 
-  /** One increment's index slices from a PREPARED (vec_id, v) frame,
-    * stamped with `batchId` — the ONE copy of the stored-index schema,
-    * shared by the batch build and the streaming grow.
+  /** One increment's index slices from a [[IndexOps.widened]]
+    * (vec_id, embedding, v) frame, stamped with `batchId` — codes from
+    * the widened `v`, vecs from the source float `embedding`; the ONE
+    * copy of the stored-index schema, shared by the batch build, the
+    * streaming grow and the refit.
     */
   private[graft] def pqIndexSlices(e: DataFrame, batchId: Long,
       cbs: Seq[Seq[Seq[Double]]]): (DataFrame, DataFrame) = {
     val codes = withCodes(e.select(col("vec_id"), col("v")), col("v"), cbs)
       .select(col("vec_id") +: (0 until M).map(m => col(s"code_$m")): _*)
       .withColumn("batch_id", lit(batchId))
-    (codes, e.select(col("vec_id"), col("v")).withColumn("batch_id", lit(batchId)))
+    (codes, e.select(col("vec_id"), col("embedding").as("v"))
+      .withColumn("batch_id", lit(batchId)))
   }
 
   /** Fit the codebooks over `emb` and store the full PQ index under
@@ -598,7 +605,7 @@ object Pq {
     val spark = emb.sparkSession
     import spark.implicits._
     val cbs = fit(emb, iters, seed)
-    val e = vecs(emb)
+    val e = IndexOps.widenedSource(emb)
     val (codes, vs) = pqIndexSlices(e, -1L, cbs)
     Bucketing.writeBucketedPartitioned(codes,
       s"${tablePrefix}_codes", s"$path/codes", "batch_id", "vec_id", nBuckets)
@@ -701,8 +708,8 @@ object Pq {
     val gen = IndexOps.maxBatchId(spark, s"${tablePrefix}_codes")
     val tsGen = IndexOps.tombstoneGen(spark, tablePrefix)
     val vs = IndexOps.survivors(spark, tablePrefix,
-      spark.table(s"${tablePrefix}_vecs"))
-      .select(col("vec_id"), col("v")).localCheckpoint(true)
+      IndexOps.readVecs(spark, s"${tablePrefix}_vecs"))
+      .select(col("vec_id"), col("embedding"), col("v")).localCheckpoint(true)
     val cbs = fitOn(vs, iters, seed)
     val mse = buildMseMicros(vs, cbs)
     val (codes, vsSlice) = pqIndexSlices(vs, gen, cbs)
@@ -735,8 +742,8 @@ object Pq {
     val gen = IndexOps.maxBatchId(spark, s"${tablePrefix}_codes")
     val tsGen = IndexOps.tombstoneGen(spark, tablePrefix)
     val vs = IndexOps.survivors(spark, tablePrefix,
-      spark.table(s"${tablePrefix}_vecs"))
-      .select(col("vec_id"), col("v")).localCheckpoint(true)
+      IndexOps.readVecs(spark, s"${tablePrefix}_vecs"))
+      .select(col("vec_id"), col("embedding"), col("v")).localCheckpoint(true)
     val coarse = Clustering.fitCentroidsOn(vs, nLists, 64, coarseIters, seed = 7L)
     val resid = residualsOn(vs, coarse)
     val cbs = fitOn(resid, pqIters)
@@ -814,7 +821,7 @@ object Pq {
     // merely vanish later), and the vecs side feeds anchors + re-rank.
     // Bucket layouts match, so no corpus-side exchange is introduced.
     val vs = IndexOps.survivors(spark, tablePrefix,
-      spark.table(s"${tablePrefix}_vecs").filter(col("batch_id") < maxBatchId),
+      IndexOps.readVecs(spark, s"${tablePrefix}_vecs").filter(col("batch_id") < maxBatchId),
       tsMaxBatchId).select(col("vec_id"), col("v"))
     val codes = IndexOps.survivors(spark, tablePrefix,
       spark.table(s"${tablePrefix}_codes").filter(col("batch_id") < maxBatchId),
@@ -853,14 +860,11 @@ object Pq {
     val coarse = Clustering.fitCentroids(emb, nLists, 64, coarseIters, seed = 7L)
     val resid = residuals(emb, coarse)
     val cbs = fitOn(resid, pqIters)
-    val codes = withCodes(coarseAssigned(emb, coarse), col("resid"), cbs)
-      .select(col("vec_id") +: col("list_id") +: (0 until M).map(m => col(s"code_$m")): _*)
-      .withColumn("batch_id", lit(-1L))
+    val (codes, vs) = ivfPqIndexSlices(IndexOps.widenedSource(emb), -1L, coarse, cbs)
     Bucketing.writeBucketedPartitionedBy(codes,
       s"${tablePrefix}_codes", s"$path/codes", Seq("batch_id", "list_id"),
       "vec_id", nBuckets)
-    Bucketing.writeBucketedPartitioned(
-      vecs(emb).select(col("vec_id"), col("v")).withColumn("batch_id", lit(-1L)),
+    Bucketing.writeBucketedPartitioned(vs,
       s"${tablePrefix}_vecs", s"$path/vecs", "batch_id", "vec_id", nBuckets)
     IndexOps.initTombstones(spark, tablePrefix, s"$path/tombstones", nBuckets)
     initMonitor(spark, tablePrefix, path)
@@ -890,8 +894,9 @@ object Pq {
       tablePrefix: String, path: String, nBuckets: Int = 8): Unit =
     IndexOps.compactIndex(spark, tablePrefix, "ivf_pq", path, nBuckets)
 
-  /** One increment's IVF-PQ index slices from a PREPARED (vec_id, v)
-    * frame, stamped with `batchId`: coarse-assign against the FROZEN
+  /** One increment's IVF-PQ index slices from a [[IndexOps.widened]]
+    * (vec_id, embedding, v) frame, stamped with `batchId` (vecs keep the
+    * source float `embedding`): coarse-assign against the FROZEN
     * `coarse` centroids, residual-encode against the frozen `cbs` —
     * the streaming-growth twin of [[buildIvfPqIndex]]'s seed slice.
     */
@@ -900,7 +905,8 @@ object Pq {
     val codes = withCodes(coarseAssignedOn(e, coarse), col("resid"), cbs)
       .select(col("vec_id") +: col("list_id") +: (0 until M).map(m => col(s"code_$m")): _*)
       .withColumn("batch_id", lit(batchId))
-    (codes, e.select(col("vec_id"), col("v")).withColumn("batch_id", lit(batchId)))
+    (codes, e.select(col("vec_id"), col("embedding").as("v"))
+      .withColumn("batch_id", lit(batchId)))
   }
 
   /** Validated (coarse, codebooks) from the stored IVF-PQ meta. */
@@ -940,7 +946,7 @@ object Pq {
     // side BEFORE the ADC cut — see adcTopKBatchStored); tsMaxBatchId
     // is the tombstone table's OWN delete-stream fence
     val vs = IndexOps.survivors(spark, tablePrefix,
-      spark.table(s"${tablePrefix}_vecs").filter(col("batch_id") < maxBatchId),
+      IndexOps.readVecs(spark, s"${tablePrefix}_vecs").filter(col("batch_id") < maxBatchId),
       tsMaxBatchId).select(col("vec_id"), col("v"))
     val codes = IndexOps.survivors(spark, tablePrefix,
       spark.table(s"${tablePrefix}_codes").filter(col("batch_id") < maxBatchId),
@@ -1018,7 +1024,7 @@ object Pq {
     val (coarse, cbs) = ivfPqIndexMeta(spark, tablePrefix)
     val coarseLit = typedlit(coarse)
     val vs = IndexOps.survivors(spark, tablePrefix,
-      spark.table(s"${tablePrefix}_vecs").filter(col("batch_id") < maxBatchId),
+      IndexOps.readVecs(spark, s"${tablePrefix}_vecs").filter(col("batch_id") < maxBatchId),
       tsMaxBatchId).select(col("vec_id"), col("v"))
     val codes = IndexOps.survivors(spark, tablePrefix,
       spark.table(s"${tablePrefix}_codes").filter(col("batch_id") < maxBatchId),

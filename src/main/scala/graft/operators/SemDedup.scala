@@ -17,9 +17,10 @@ import graft.sources.Bucketing
   *    q86's seeded `Clustering.centroids`, the same argmax-dot
   *    assignment rule, so screening stays in the q84–q88 family);
   *  - `<prefix>_members` (vec_id, cluster_id, v, nrm) is the standing
-  *    corpus, bucketed by `cluster_id` — EXACTLY the join key the
-  *    screen probes — and partitioned by `batch_id` for streaming
-  *    growth and replay fencing;
+  *    corpus (`v` the source array<float>, widened on read by
+  *    [[IndexOps.readVecs]]), bucketed by `cluster_id` — EXACTLY the
+  *    join key the screen probes — and partitioned by `batch_id` for
+  *    streaming growth and replay fencing;
   *  - an incoming batch pays O(|batch| · k) assignment + exact cosine
   *    against its own clusters' members only — the corpus is never
   *    re-assigned, never re-paired against itself;
@@ -42,8 +43,10 @@ import graft.sources.Bucketing
   */
 object SemDedup {
 
-  /** Stored-layout version (the DecontamStream discipline). */
-  val SemIndexFormat = 1
+  /** Stored-layout version (the DecontamStream discipline). Format 2
+    * stores `_members.v` as the source array<float>.
+    */
+  val SemIndexFormat = 2
 
   /** Assignment-rule tags recorded in meta per generation. */
   val RuleDot = "dot"
@@ -67,10 +70,11 @@ object SemDedup {
       .cast("long")
   }
 
-  /** (vec_id, v, nrm, cluster_id) of a raw (vec_id, embedding) frame
-    * under the frozen centroids, plus the norm staged once (cosines
-    * below reuse it; recomputing it per pair is the n-vs-n² fold q33
-    * fixed). `rule` is the generation's assignment rule recorded in
+  /** (vec_id, cluster_id, v, nrm, embedding) of a raw (vec_id,
+    * embedding) frame under the frozen centroids — `v` the widened
+    * vector, `embedding` the source float the members slice stores —
+    * plus the norm staged once (cosines below reuse it; recomputing it
+    * per pair is the n-vs-n² fold q33 fixed). `rule` is the generation's assignment rule recorded in
     * meta: "dot" = q86's argmax-dot tree (seeded UNIT-NORM centroids,
     * where argmax-dot ≡ argmin-L2 — the build generation, what q178's
     * oracle replays); "l2" = the exact half-norm rule
@@ -79,11 +83,14 @@ object SemDedup {
     * bias assignment toward long centroids, the round-11 IVF lesson).
     */
   private def assigned(emb: DataFrame, cs: Seq[Seq[Double]],
-      rule: String): DataFrame =
-    (if (rule == RuleL2) Clustering.assignL2(emb, cs)
-     else Clustering.assign(emb, cs))
+      rule: String): DataFrame = {
+    val p = IndexOps.widenedSource(emb)
+    (if (rule == RuleL2) Clustering.assignL2On(p, cs)
+     else Clustering.assignOn(p, cs))
       .withColumn("nrm", l2Norm(col("v")))
-      .select(col("vec_id"), col("cluster_id"), col("v"), col("nrm"))
+      .select(col("vec_id"), col("cluster_id"), col("v"), col("nrm"),
+        col("embedding"))
+  }
 
   /** One increment's member slice, stamped with `batchId` — the ONE
     * copy of the stored schema, shared by the batch build, the
@@ -96,7 +103,8 @@ object SemDedup {
     assigned(
       emb.filter(col("vec_id").isNotNull && col("embedding").isNotNull),
       cs, rule)
-      .withColumn("batch_id", lit(batchId))
+      .select(col("vec_id"), col("cluster_id"), col("embedding").as("v"),
+        col("nrm"), lit(batchId).as("batch_id"))
 
   /** The monitor row for one maintenance batch (IndexOps.MonitorSchema —
     * mean assignment distance vs the build baseline, alert at
@@ -150,12 +158,13 @@ object SemDedup {
       IndexOps.MonitorSchema)
     Bucketing.writeBucketedPartitioned(empty, s"${tablePrefix}_monitor",
       s"$path/monitor", "batch_id", "mse_micros", nBuckets = 1)
-    val buildMse = buildMseOf(members, cs)
+    val buildMse = buildMseOf(
+      IndexOps.readVecs(spark, s"${tablePrefix}_members"), cs)
     writeMeta(spark, tablePrefix, path, k, dim, cs, buildMse, RuleDot,
       IndexOps.NeverCompacted, IndexOps.NeverCompacted)
   }
 
-  /** Mean assignment distance of an assigned member frame against its
+  /** Mean assignment distance of a widened member frame against its
     * generation's centroids (the build / refit staleness baseline) — a
     * 1-row scalar read.
     */
@@ -213,16 +222,17 @@ object SemDedup {
     * screen stream (the r14-advisor rule `Dedup.storedCorpusFrames`
     * applies with separate fences; the deletions-between-replay-windows
     * cadence makes replays converge). Winner = the LOWEST surviving
-    * same-cluster corpus id at cos >= `minCos` (exact cosine over
-    * stored doubles — bit-identical to the recompute over the raw
-    * corpus).
+    * same-cluster corpus id at cos >= `minCos` (exact cosine over the
+    * stored vectors widened on read — bit-identical to the recompute
+    * over the raw corpus).
     */
   def screenSem(spark: SparkSession, incoming: DataFrame, tablePrefix: String,
       minCos: Double = 0.35,
       maxBatchId: Long = Long.MaxValue): DataFrame = {
     val (cs, _, rule) = semIndexMeta(spark, tablePrefix)
     val members = IndexOps.survivors(spark, tablePrefix,
-      spark.table(s"${tablePrefix}_members").filter(col("batch_id") < maxBatchId))
+      IndexOps.readVecs(spark, s"${tablePrefix}_members")
+        .filter(col("batch_id") < maxBatchId))
       .select(col("vec_id").as("corp_id"), col("cluster_id"),
         col("v").as("cv"), col("nrm").as("cnrm"))
     val inc = assigned(
@@ -318,18 +328,20 @@ object SemDedup {
     val meta = spark.table(s"${tablePrefix}_meta").collect()(0)
     val (k, dim) = (meta.getAs[Int]("k"), meta.getAs[Int]("dim"))
     // survivors as a raw-shaped (vec_id, embedding) frame: the stored v
-    // IS asDouble(embedding) round-tripped, so the fit and the
-    // re-assignment see exactly the bits a from-raw rebuild would
+    // IS the source float embedding, so the fit and the re-assignment
+    // see exactly the bits a from-raw rebuild would, and the rewrite
+    // stores that float again
     val survivors = IndexOps.survivors(spark, tablePrefix,
-      spark.table(s"${tablePrefix}_members"))
-      .select(col("vec_id"), col("v").as("embedding"))
+      IndexOps.readVecs(spark, s"${tablePrefix}_members"))
+      .select(col("vec_id"), col("embedding"))
     val cs2 = Clustering.fitCentroids(survivors, k, dim, iters, seed)
     val reassigned = memberSlice(survivors, gen, cs2, RuleL2)
     IndexOps.swapIn(spark, s"${tablePrefix}_members", s"$path/members",
       reassigned, Seq("batch_id" -> "BIGINT"), "cluster_id", nBuckets)
     IndexOps.initTombstones(spark, tablePrefix, s"$path/tombstones", nBuckets,
       overwrite = true)
-    val newMse = buildMseOf(spark.table(s"${tablePrefix}_members"), cs2)
+    val newMse = buildMseOf(
+      IndexOps.readVecs(spark, s"${tablePrefix}_members"), cs2)
     writeMeta(spark, tablePrefix, path, k, dim, cs2, newMse, RuleL2,
       gen, tsGen)
   }

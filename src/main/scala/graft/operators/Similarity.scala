@@ -390,11 +390,15 @@ object Similarity {
     * (r13) adds the `_tombstones` table and the `compacted_through`
     * meta column (see [[IndexOps]]) — a format-1 index read by this code
     * would silently resurrect deleted vectors, so it must rebuild.
+    * Format 3 stores `_vecs.v` at source precision (array<float>, see
+    * [[IndexOps.widened]]); a format-2 array<double> table is rejected
+    * rather than mixed with float slices.
     */
-  val AnnIndexFormat = 2
+  val AnnIndexFormat = 3
 
-  /** One increment's index slices from a PREPARED (vec_id, v) frame:
-    * (buckets (vec_id, table, bucket), vecs (vec_id, v)), stamped with
+  /** One increment's index slices from a [[IndexOps.widened]]
+    * (vec_id, embedding, v) frame: (buckets (vec_id, table, bucket),
+    * vecs (vec_id, v = the source float embedding)), stamped with
     * `batchId`. The ONE copy of the stored-index schema, shared by the
     * batch build and the streaming grow (AnnStream).
     */
@@ -403,7 +407,8 @@ object Similarity {
     val buckets = withLshBucketsOn(e.select(col("vec_id"), col("v")), tables, bits)
       .select(col("vec_id"), col("table"), col("bucket"))
       .withColumn("batch_id", lit(batchId))
-    (buckets, e.select(col("vec_id"), col("v")).withColumn("batch_id", lit(batchId)))
+    (buckets, e.select(col("vec_id"), col("embedding").as("v"))
+      .withColumn("batch_id", lit(batchId)))
   }
 
   /** Build and store the standing ANN index for `emb` under
@@ -420,7 +425,7 @@ object Similarity {
     import graft.sources.Bucketing
     val spark = emb.sparkSession
     import spark.implicits._
-    val e = Par.fanOut(emb.select(col("vec_id"), asDouble(col("embedding")).as("v")))
+    val e = IndexOps.widenedSource(emb)
     val (buckets, vecs) = annIndexSlices(e, -1L, tables, bits)
     Bucketing.writeBucketedPartitioned(buckets,
       s"${tablePrefix}_buckets", s"$path/buckets", "batch_id", "bucket", nBuckets)
@@ -493,7 +498,7 @@ object Similarity {
     // exchange preserved (the postings scan is untouched, the anti-join
     // matches the vecs bucket layout).
     val vecs = IndexOps.survivors(spark, tablePrefix,
-      spark.table(s"${tablePrefix}_vecs").filter(col("batch_id") < maxBatchId),
+      IndexOps.readVecs(spark, s"${tablePrefix}_vecs").filter(col("batch_id") < maxBatchId),
       tsMaxBatchId).select(col("vec_id"), col("v"))
     val corpusBuckets = spark.table(s"${tablePrefix}_buckets")
       .filter(col("batch_id") < maxBatchId)
@@ -508,8 +513,9 @@ object Similarity {
     * EVERY invocation, while the LSH index already stores the full
     * vectors (`<prefix>_vecs`, its exact-re-rank side). Serving the leg
     * from that standing bucketed table keeps the answer BIT-IDENTICAL —
-    * the stored `v` IS `asDouble(embedding)` round-tripped through
-    * parquet (exact), the cosine is the same IEEE tree, and rank/tie
+    * the stored `v` IS the source float `embedding`, widened by
+    * [[IndexOps.readVecs]] exactly as the recompute path widens it
+    * (float→double is exact), the cosine is the same IEEE tree, and rank/tie
     * rules are unchanged — so a fusion over this leg carries q146's
     * full DuckDB oracle verbatim (the q169/q170 precedent, applied to
     * the dense side). Returns (doc_id, rank_dense) over the top
@@ -530,7 +536,7 @@ object Similarity {
     import org.apache.spark.sql.expressions.Window
     annIndexMeta(spark, tablePrefix) // format/layout validation only
     val vecs = IndexOps.survivors(spark, tablePrefix,
-      spark.table(s"${tablePrefix}_vecs").filter(col("batch_id") < maxBatchId),
+      IndexOps.readVecs(spark, s"${tablePrefix}_vecs").filter(col("batch_id") < maxBatchId),
       tsMaxBatchId).select(col("vec_id"), col("v"))
     // 1-row bucketed point lookup collected to the driver — loud when
     // the query vector is absent or tombstoned; parquet → driver →
@@ -582,7 +588,7 @@ object Similarity {
     import org.apache.spark.sql.expressions.Window
     annIndexMeta(spark, tablePrefix)
     val vecs = IndexOps.survivors(spark, tablePrefix,
-      spark.table(s"${tablePrefix}_vecs").filter(col("batch_id") < maxBatchId),
+      IndexOps.readVecs(spark, s"${tablePrefix}_vecs").filter(col("batch_id") < maxBatchId),
       tsMaxBatchId).select(col("vec_id"), col("v"))
     val anchors = vecs.filter(col("vec_id") < batchSize).limit(batchSize)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))

@@ -25,7 +25,9 @@ import graft.sources.Bucketing
   *    vec_id — array<long> keeps parquet layouts simple here; a 100 TB
   *    deployment packs the 64 codes into a 64-byte binary column, same
   *    dataflow;
-  *  - `<prefix>_vecs` (vec_id, v, batch_id) — anchors + exactness checks;
+  *  - `<prefix>_vecs` (vec_id, v array<float>, batch_id) — anchors +
+  *    exactness checks, stored at source precision and widened on read
+  *    ([[IndexOps.readVecs]]);
   *  - `<prefix>_tombstones` / `<prefix>_monitor` / `<prefix>_meta`
   *    exactly as the PQ family (meta: format, levels, mins, maxs,
   *    build MSE, both compaction fences).
@@ -33,9 +35,10 @@ import graft.sources.Bucketing
 object Sq8 {
 
   /** Stored-layout version — bump on any schema/encoding change so a
-    * stale layout fails loudly instead of decoding garbage.
+    * stale layout fails loudly instead of decoding garbage. Format 2
+    * stores `_vecs.v` as the source array<float>.
     */
-  val Sq8IndexFormat = 1
+  val Sq8IndexFormat = 2
 
   /** Code range [0, Levels]. */
   val Levels = 255L
@@ -53,8 +56,7 @@ object Sq8 {
   val ClampAlertPpm = 100000L
 
   private def prepared(emb: DataFrame): DataFrame =
-    emb.select(col("vec_id"),
-      graft.functions.VectorFunctions.asDouble(col("embedding")).as("v"))
+    IndexOps.widened(emb.select(col("vec_id"), col("embedding")))
 
   /** Per-dim (min, max) fit — a 2·dim-column driver fold (the
     * codebook-fold precedent: bounded by the embedding width, never by
@@ -131,16 +133,18 @@ object Sq8 {
         (a, b) => a + b),
       lit(0L), (acc, c) => acc + c)
 
-  /** One increment's index slices from a prepared (vec_id, v) frame —
-    * the ONE copy of the stored schema, shared by build, stream grow,
-    * compaction re-encode and refit.
+  /** One increment's index slices from a [[IndexOps.widened]]
+    * (vec_id, embedding, v) frame — codes from the widened `v`, vecs
+    * from the source float `embedding`; the ONE copy of the stored
+    * schema, shared by build, stream grow and refit.
     */
   private[graft] def sq8IndexSlices(e: DataFrame, batchId: Long,
       mins: Seq[Double], maxs: Seq[Double]): (DataFrame, DataFrame) = {
     val codes = e.select(col("vec_id"),
         encodeExpr(col("v"), mins, maxs).as("codes"))
       .withColumn("batch_id", lit(batchId))
-    (codes, e.select(col("vec_id"), col("v")).withColumn("batch_id", lit(batchId)))
+    (codes, e.select(col("vec_id"), col("embedding").as("v"))
+      .withColumn("batch_id", lit(batchId)))
   }
 
   private def mseFrame(e: DataFrame, mins: Seq[Double],
@@ -279,7 +283,7 @@ object Sq8 {
     // tsMaxBatchId fences the tombstone table by its OWN delete-stream
     // numbering (independent of the data stream's maxBatchId)
     val vs = IndexOps.survivors(spark, tablePrefix,
-      spark.table(s"${tablePrefix}_vecs").filter(col("batch_id") < maxBatchId),
+      IndexOps.readVecs(spark, s"${tablePrefix}_vecs").filter(col("batch_id") < maxBatchId),
       tsMaxBatchId)
     val codes = IndexOps.survivors(spark, tablePrefix,
       spark.table(s"${tablePrefix}_codes").filter(col("batch_id") < maxBatchId),
@@ -355,8 +359,8 @@ object Sq8 {
     val gen = IndexOps.maxBatchId(spark, s"${tablePrefix}_codes")
     val tsGen = IndexOps.tombstoneGen(spark, tablePrefix)
     val vs = IndexOps.survivors(spark, tablePrefix,
-      spark.table(s"${tablePrefix}_vecs"))
-      .select(col("vec_id"), col("v")).localCheckpoint(true)
+      IndexOps.readVecs(spark, s"${tablePrefix}_vecs"))
+      .select(col("vec_id"), col("embedding"), col("v")).localCheckpoint(true)
     val (mins, maxs) = fitStats(vs)
     val (codes, vsSlice) = sq8IndexSlices(vs, gen, mins, maxs)
     // the two generation swaps, the tombstone reset and the MSE job are

@@ -37,7 +37,6 @@ object Compaction {
     }
     val df = spark.read.parquet(inPath)
     val rows = df.count()
-    spark.conf.set("spark.sql.files.maxRecordsPerFile", targetRecordsPerFile)
     // one task per output partition bundle: repartition on the partition
     // column so each hive partition's rows land in as few files as the
     // record cap allows
@@ -49,8 +48,11 @@ object Compaction {
     val laidOut =
       if (clusterBy.isEmpty) bundled
       else bundled.sortWithinPartitions((partitionCol +: clusterBy).map(col): _*)
+    // the record cap is a writer option, not session conf: it caps this
+    // rewrite only, never the caller's later writes
     laidOut
       .write.mode(SaveMode.Overwrite)
+      .option("maxRecordsPerFile", targetRecordsPerFile)
       .partitionBy(partitionCol)
       .parquet(outPath)
     CompactionReport(rows, parquetFiles(inPath), parquetFiles(outPath))

@@ -55,9 +55,22 @@ object Runner {
   def run(spark: SparkSession, cfg: PipelineConfig,
       only: Option[String] = None): PipelineOutcome = {
     only.foreach(s => require(stageNames.contains(s), s"unknown stage: $s"))
-    spark.conf.set("spark.sql.shuffle.partitions", cfg.shufflePartitions)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", cfg.maxPartitionBytes)
+    // the pipeline's sizing applies to its own stages only: the caller's
+    // values come back in the finally, whether the run succeeds or not
+    val pipelineConf = Seq(
+      "spark.sql.shuffle.partitions" -> cfg.shufflePartitions.toString,
+      "spark.sql.files.maxPartitionBytes" -> cfg.maxPartitionBytes)
+    val callerConf = pipelineConf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pipelineConf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try runStages(spark, cfg, only)
+    finally callerConf.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 
+  private def runStages(spark: SparkSession, cfg: PipelineConfig,
+      only: Option[String]): PipelineOutcome = {
     val stages = scala.collection.mutable.ArrayBuffer.empty[StageResult]
     var dqReport: Option[DqChecks.DqReport] = None
 

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
-import graft.functions.VectorFunctions.asDouble
 import graft.operators.{Pq, Similarity, Sq8}
 
 /** Streaming embedding-index MAINTENANCE — the composition of
@@ -46,14 +45,15 @@ object AnnStream {
      else r).parquet(inbox)
   }
 
-  /** (vec_id, v: array<double>) of a micro-batch, malformed rows dropped
-    * (the DedupStream contract: a NULL id/vector must not become a NULL
-    * index row).
+  /** (vec_id, embedding: array<float>, v: array<double>) of a
+    * micro-batch — the [[graft.operators.IndexOps.widened]] shape, whose
+    * slices store the source float — malformed rows dropped (the
+    * DedupStream contract: a NULL id/vector must not become a NULL index
+    * row).
     */
   private def prepared(batch: DataFrame): DataFrame =
-    batch.select(col("vec_id"), col("embedding"))
-      .filter(col("vec_id").isNotNull && col("embedding").isNotNull)
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
+    graft.operators.IndexOps.widened(batch.select(col("vec_id"), col("embedding"))
+      .filter(col("vec_id").isNotNull && col("embedding").isNotNull))
 
   /** Append-if-absent of `slices` (name -> stamped frame) for `batchId`:
     * probe each table's own partition, append exactly the missing ones

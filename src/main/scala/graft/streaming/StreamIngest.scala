@@ -68,30 +68,49 @@ object StreamIngest {
     StructField("event_type", StringType),
     StructField("value", DoubleType)))
 
-  /** ST2: streaming scan of the inbox directory. PERMISSIVE parsing with a
-    * `_corrupt_record` capture column: a malformed line lands as one row
-    * with the raw text preserved and typed columns NULL, instead of killing
-    * the stream — callers route `_corrupt_record IS NOT NULL` rows to a
+  /** ST2: streaming scan of the inbox directory. Every field is read as a
+    * STRING and typed here with `try_cast` (`ts` with `try_to_timestamp`),
+    * so whether a line is corrupt never depends on which columns the
+    * consumer reads: the CSV parser converts only the columns a query
+    * requires, so with typed read columns a line malformed only in an
+    * unread field (say `event_id` under `tumblingCounts`) parsed clean.
+    * `_corrupt_record` is set for a structural fault (PERMISSIVE parsing
+    * keeps the raw text) and for a line whose non-empty field fails its
+    * cast (the fields re-joined with commas); an empty field is NULL, not
+    * corrupt. Callers route `_corrupt_record IS NOT NULL` rows to a
     * quarantine sink (the streaming face of the DQ gate).
     */
-  def readInbox(spark: SparkSession, inbox: String): DataFrame =
-    spark.readStream
-      .schema(inboxSchema.add("_corrupt_record", StringType))
+  def readInbox(spark: SparkSession, inbox: String): DataFrame = {
+    val raw = spark.readStream
+      .schema(StructType(inboxSchema.map(_.copy(dataType = StringType)))
+        .add("_corrupt_record", StringType))
       .option("header", "true")
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .csv(inbox)
-      // try_to_timestamp, not to_timestamp: under Spark 4's default ANSI
-      // mode a syntactically-valid CSV row with an unparseable ts would
-      // otherwise throw and kill the stream — exactly what the quarantine
-      // contract above promises to survive (the NULL ts row then carries
-      // its raw line through _corrupt_record handling downstream)
-      .withColumn("ts", try_to_timestamp(col("ts"), lit("yyyy-MM-dd HH:mm:ss.SSSSSS")))
+    // try_* forms, not cast/to_timestamp: under Spark 4's default ANSI
+    // mode an unparseable value would otherwise throw and kill the stream
+    val typed = inboxSchema.fields.toSeq.map { f =>
+      f.name -> (f.dataType match {
+        case StringType if f.name == "ts" =>
+          try_to_timestamp(col("ts"), lit("yyyy-MM-dd HH:mm:ss.SSSSSS"))
+        case StringType => col(f.name)
+        case t => col(f.name).try_cast(t)
+      })
+    }
+    val castFailed = typed.map { case (n, t) =>
+      col(n).isNotNull && col(n) =!= "" && t.isNull
+    }.reduce(_ || _)
+    val line = concat_ws(",", inboxSchema.fieldNames.toSeq.map(n =>
+      coalesce(col(n), lit(""))): _*)
+    raw.select(typed.map { case (n, t) => t.as(n) } :+
+      coalesce(col("_corrupt_record"), when(castFailed, line))
+        .as("_corrupt_record"): _*)
+  }
 
-  /** Split a permissively-parsed stream into (clean, quarantine). The
-    * quarantine side keeps `event_id` alongside the raw line: Spark
-    * disallows plans whose only referenced source column is the internal
-    * corrupt-record column.
+  /** Split a [[readInbox]] stream into (clean, quarantine). The
+    * quarantine side keeps `event_id` (NULL when it was the malformed
+    * field) alongside the raw line.
     */
   def quarantineCorrupt(df: DataFrame): (DataFrame, DataFrame) = (
     df.filter(col("_corrupt_record").isNull).drop("_corrupt_record"),

@@ -77,9 +77,7 @@ class Sq8IndexSpec extends AnyFunSuite {
     // before vecs/monitor. The replay must fill EXACTLY what is missing.
     val ghost = emb.filter(col("vec_id") < 3)
       .select((col("vec_id") + 7000L).as("vec_id"), col("embedding"))
-    val gPrepared = ghost.select(col("vec_id"),
-      transform(col("embedding"), x => x.cast("double")).as("v"))
-    val (cSlice, _) = Sq8.sq8IndexSlices(gPrepared, 2L, mins, maxs)
+    val (cSlice, _) = Sq8.sq8IndexSlices(IndexOps.widened(ghost), 2L, mins, maxs)
     graft.sources.Bucketing.appendBucketedPartition(cSlice, "sq8s_codes")
     // a generation rewrite over the half-landed batch must REFUSE: a
     // compaction here would fold the partial batch, advance the fence

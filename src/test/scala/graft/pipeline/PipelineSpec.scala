@@ -228,6 +228,21 @@ class PipelineSpec extends AnyFunSuite {
     assert(m("gold")("gold_rows") == 0L)
   }
 
+  test("Runner.run leaves the caller's session conf as it found it, on success and on a failed stage") {
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.files.maxPartitionBytes")
+    def session(): Seq[Option[String]] = keys.map(spark.conf.getOption)
+    val before = session()
+    // pipeline values that differ from the session's, so a leak shows
+    val cfg = tmpCfg().copy(shufflePartitions = 7, maxPartitionBytes = "3m")
+    assert(!before.contains(Some("7")) && !before.contains(Some("3m")))
+    val ok = Runner.run(spark, cfg)
+    assert(ok.failedStage.isEmpty)
+    assert(session() == before)
+    val failed = Runner.run(spark, cfg.copy(rawPath = s"${cfg.bronzePath}_no_such_raw"))
+    assert(failed.failedStage.contains("bronze"))
+    assert(session() == before)
+  }
+
   test("single-stage runs compose into the full pipeline (O3 DAG task boundaries)") {
     val cfg = tmpCfg()
     // three separate invocations, as dags/graft_etl_daily.py schedules them —

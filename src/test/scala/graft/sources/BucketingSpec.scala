@@ -47,8 +47,12 @@ class BucketingSpec extends AnyFunSuite {
       .withColumn("event_date", to_date(col("ts")))
       .repartition(16)
       .write.partitionBy("event_date").parquet(s"$base/frag")
+    val capKey = "spark.sql.files.maxRecordsPerFile"
+    val capBefore = spark.conf.getOption(capKey)
     val report = Compaction.compact(spark, s"$base/frag", s"$base/compact",
       "event_date", targetRecordsPerFile = 1000000L)
+    // the record cap is the rewrite's writer option, not session conf
+    assert(spark.conf.getOption(capKey) == capBefore)
     assert(report.rows == 1000L)
     assert(report.filesAfter < report.filesBefore / 4,
       s"${report.filesBefore} -> ${report.filesAfter}")
@@ -63,8 +67,11 @@ class BucketingSpec extends AnyFunSuite {
       .withColumn("event_date", lit("2024-01-01"))
       .repartition(8)
       .write.partitionBy("event_date").parquet(s"$base/frag")
+    val capKey = "spark.sql.files.maxRecordsPerFile"
+    val capBefore = spark.conf.getOption(capKey)
     Compaction.compact(spark, s"$base/frag", s"$base/clustered",
       "event_date", targetRecordsPerFile = 150L, clusterBy = Seq("value"))
+    assert(spark.conf.getOption(capKey) == capBefore)
     def files(p: String): Seq[java.io.File] = {
       def walk(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk) else Seq(f)

@@ -3,7 +3,7 @@ package graft.streaming
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession.{spark, sf0001}
-import graft.operators.{Pq, Similarity}
+import graft.operators.{IndexOps, Pq, Similarity}
 import java.nio.file.{Files, Path, Paths}
 
 /** Streaming embedding-index maintenance (AnnStream): the stored ANN/PQ
@@ -67,9 +67,7 @@ class AnnStreamSpec extends AnyFunSuite {
     // the missing table (vecs), never duplicate the present one.
     val ghost = emb.filter(col("vec_id") < 3)
       .select((col("vec_id") + 7000L).as("vec_id"), col("embedding"))
-    val prepared = ghost.select(col("vec_id"),
-      transform(col("embedding"), x => x.cast("double")).as("v"))
-    val (bSlice, _) = Similarity.annIndexSlices(prepared, 2L,
+    val (bSlice, _) = Similarity.annIndexSlices(IndexOps.widened(ghost), 2L,
       tables = 32, bits = 6)
     graft.sources.Bucketing.appendBucketedPartition(bSlice, "as_ann_buckets")
     AnnStream.indexBatchAnn(spark, ghost, 2L, "as_ann")
@@ -356,9 +354,8 @@ class AnnStreamSpec extends AnyFunSuite {
     // the exact crash window the advisor flagged: compaction folding
     // past it would fence off the replay that writes the (potentially
     // alerting) monitor row
-    val delta = emb.filter(col("vec_id") < 20)
-      .select((col("vec_id") + 7000L).as("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
+    val delta = IndexOps.widened(emb.filter(col("vec_id") < 20)
+      .select((col("vec_id") + 7000L).as("vec_id"), col("embedding")))
     val (codes, vs) = Pq.pqIndexSlices(delta, 0L, cbs)
     graft.sources.Bucketing.appendBucketedPartition(codes, "hm_pq_codes")
     graft.sources.Bucketing.appendBucketedPartition(vs, "hm_pq_vecs")

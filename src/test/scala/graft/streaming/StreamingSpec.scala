@@ -146,6 +146,35 @@ class StreamingSpec extends AnyFunSuite {
     assert(badRows.head.getAs[String]("raw_line").startsWith("not_a_number"))
   }
 
+  test("a line malformed only in event_id is quarantined whichever columns the clean side reads") {
+    val inbox = tmp("graft_inbox_eid")
+    Files.writeString(new java.io.File(s"$inbox/batch_eid.csv").toPath,
+      "event_id,ts,user_id,event_type,value\n" +
+        "9001,2024-01-09 10:00:00.000000,5,view,1.5\n" +
+        "e9002,2024-01-09 10:01:00.000000,6,view,1.00\n" +
+        "9003,2024-01-09 10:02:00.000000,,click,\n")
+    val out = tmp("graft_quarantine_eid")
+    def drained(df: org.apache.spark.sql.DataFrame, name: String): Array[org.apache.spark.sql.Row] = {
+      df.writeStream.format("parquet")
+        .option("path", s"$out/$name").option("checkpointLocation", s"$out/ck_$name")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        .awaitTermination()
+      spark.read.parquet(s"$out/$name").collect()
+    }
+    val (clean, bad) = StreamIngest.quarantineCorrupt(StreamIngest.readInbox(spark, inbox))
+    // the projection tumblingCounts reads never touches event_id
+    assert(drained(clean.select("ts", "event_type", "value"), "narrow").length == 2)
+    val wide = drained(clean, "wide")
+    assert(wide.map(_.getAs[Long]("event_id")).sorted.toSeq == Seq(9001L, 9003L))
+    // empty fields are NULL, not corrupt
+    val r3 = wide.find(_.getAs[Long]("event_id") == 9003L).get
+    assert(r3.isNullAt(r3.fieldIndex("user_id")) && r3.isNullAt(r3.fieldIndex("value")))
+    val q = drained(bad, "bad")
+    assert(q.length == 1)
+    assert(q.head.isNullAt(q.head.fieldIndex("event_id")))
+    assert(q.head.getAs[String]("raw_line").startsWith("e9002,"))
+  }
+
   test("stream-stream join pairs purchases with same-user errors in the prior hour") {
     import graft.SparkTestSession.implicits._
     implicit val sqlCtx = spark.sqlContext
