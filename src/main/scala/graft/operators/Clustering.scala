@@ -134,20 +134,12 @@ object Clustering {
     * fold — the DqChecks report-row pattern, not a data collect.
     */
   def fitCentroids(emb: DataFrame, k: Int = 16, dim: Int = 64, iters: Int = 3,
-      seed: Long = 11L): Seq[Seq[Double]] =
-    fitCentroidsOn(vecsOf(emb), k, dim, iters, seed)
-
-  /** [[fitCentroids]] over a PREPARED (vec_id, v: array<double>) frame —
-    * the index-refit entry point (Pq.refitIvfPqIndex fits the coarse
-    * quantizer from the stored `_vecs` table, read back widened by
-    * `IndexOps.readVecs`).
-    */
-  private[operators] def fitCentroidsOn(prepared: DataFrame, k: Int = 16,
-      dim: Int = 64, iters: Int = 3, seed: Long = 11L): Seq[Seq[Double]] = {
+      seed: Long = 11L): Seq[Seq[Double]] = {
     // every iteration re-reads the projected vectors; checkpoint once so
     // a multi-iteration fit costs ONE source pass (the Pq.fitOn
     // discipline), released as soon as the centroids — driver data —
     // are folded
+    val prepared = vecsOf(emb)
     val p = if (iters > 1) prepared.localCheckpoint(true) else prepared
     val cs = fitCentroidsPrepared(p, k, dim, iters, seed)
     if (iters > 1) Dedup.release(p) // centroids are folded; free the blocks
@@ -157,8 +149,9 @@ object Clustering {
   /** The Lloyd loop over an ALREADY-materialized (…, v) frame — the
     * shared-projection entry (r16, the Pq.fitOnPrepared twin): callers
     * that checkpoint the corpus projection once for fit AND probe
-    * (Pq.ivfPqTopKFit, Similarity.ivfTopK) pass it here; the caller owns
-    * the block lifetime.
+    * (Pq.ivfPqTopKFit, Similarity.ivfTopK, and Pq.refitIvfPqIndex over
+    * its checkpointed survivors) pass it here; the caller owns the block
+    * lifetime.
     */
   private[operators] def fitCentroidsPrepared(p: DataFrame, k: Int,
       dim: Int, iters: Int, seed: Long): Seq[Seq[Double]] = {

@@ -112,7 +112,8 @@ object Pq {
     * projection entry (r16): [[adcTopKFit]]/[[ivfPqTopKFit]] checkpoint
     * the corpus projection ONCE and reuse it for the fit iterations AND
     * the probe, so a recompute query pays one corpus scan instead of one
-    * per fit plus one per probe branch. Caller owns the block lifetime.
+    * per fit plus one per probe branch; the refits fit their already-
+    * checkpointed survivors here too. Caller owns the block lifetime.
     */
   private[operators] def fitOnPrepared(p: DataFrame, iters: Int,
       seed: Long): Seq[Seq[Seq[Double]]] = {
@@ -710,7 +711,7 @@ object Pq {
     val vs = IndexOps.survivors(spark, tablePrefix,
       IndexOps.readVecs(spark, s"${tablePrefix}_vecs"))
       .select(col("vec_id"), col("embedding"), col("v")).localCheckpoint(true)
-    val cbs = fitOn(vs, iters, seed)
+    val cbs = fitOnPrepared(vs, iters, seed)
     val mse = buildMseMicros(vs, cbs)
     val (codes, vsSlice) = pqIndexSlices(vs, gen, cbs)
     IndexOps.swapIn(spark, s"${tablePrefix}_codes", s"$path/codes",
@@ -744,7 +745,7 @@ object Pq {
     val vs = IndexOps.survivors(spark, tablePrefix,
       IndexOps.readVecs(spark, s"${tablePrefix}_vecs"))
       .select(col("vec_id"), col("embedding"), col("v")).localCheckpoint(true)
-    val coarse = Clustering.fitCentroidsOn(vs, nLists, 64, coarseIters, seed = 7L)
+    val coarse = Clustering.fitCentroidsPrepared(vs, nLists, 64, coarseIters, 7L)
     val resid = residualsOn(vs, coarse)
     val cbs = fitOn(resid, pqIters)
     val mse = buildMseMicros(resid, cbs)

@@ -81,7 +81,7 @@ object BronzeIngest {
         .partitionBy(cfg.partitionColumns: _*)
         .parquet(cfg.bronzePath)
     }
-    if (rows == 0) df.limit(0).write.mode(SaveMode.Overwrite).parquet(cfg.bronzePath)
+    if (rows == 0) writeCounted(df.limit(0))(_.mode(SaveMode.Overwrite).parquet(cfg.bronzePath))
     rows
   }
 

@@ -114,7 +114,7 @@ object DqChecks {
     val report = evaluate(df, rules)
     writeArtifact(report, cfg.artifactsDir)
     if (cfg.writeSilver)
-      clean(df, rules).write.mode("overwrite").parquet(cfg.silverPath + "_clean")
+      writeCounted(clean(df, rules))(_.mode("overwrite").parquet(cfg.silverPath + "_clean"))
     report
   }
 }

@@ -4,6 +4,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession.{spark, sf0001}
 import java.nio.file.Files
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.column.Encoding
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import scala.jdk.CollectionConverters._
 
 class PipelineSpec extends AnyFunSuite {
 
@@ -25,6 +30,42 @@ class PipelineSpec extends AnyFunSuite {
     new java.io.File(path).listFiles().filter(_.getName.startsWith("event_date="))
       .map(d => d.getName -> d.list().count(f => f.startsWith("part-") && f.endsWith(".parquet")))
       .toMap
+
+  /** Every parquet part file under `dir`, at any depth. */
+  private def parquetParts(dir: String): Seq[java.io.File] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+      else if (f.getName.startsWith("part-") && f.getName.endsWith(".parquet")) Seq(f)
+      else Nil
+    walk(new java.io.File(dir))
+  }
+
+  /** column -> (data-page encodings, every data page is v2) from the
+    * footer of one parquet file, over all its row groups.
+    */
+  private def footerColumns(f: java.io.File): Map[String, (Set[Encoding], Boolean)] = {
+    val in = HadoopInputFile.fromPath(new Path(f.toURI), spark.sparkContext.hadoopConfiguration)
+    val reader = ParquetFileReader.open(in)
+    try reader.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala)
+      .groupBy(_.getPath.toDotString).map { case (c, chunks) =>
+        c -> (chunks.flatMap(_.getEncodingStats.getDataEncodings.asScala).toSet,
+          chunks.forall(_.getEncodingStats.usesV2Pages))
+      }
+    finally reader.close()
+  }
+
+  /** Run `body` once with the vectorized parquet reader on and once with
+    * it off, then put the caller's setting back.
+    */
+  private def underBothReaders(body: String => Unit): Unit = {
+    val key = "spark.sql.parquet.enableVectorizedReader"
+    val before = spark.conf.getOption(key)
+    try Seq("true", "false").foreach { on => spark.conf.set(key, on); body(on) }
+    finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 
   test("normalizeName matches reference semantics (batch_etl.py:43)") {
     assert(BronzeIngest.normalizeName("  Tpep Pickup Datetime ") == "tpep_pickup_datetime")
@@ -241,6 +282,71 @@ class PipelineSpec extends AnyFunSuite {
     val failed = Runner.run(spark, cfg.copy(rawPath = s"${cfg.bronzePath}_no_such_raw"))
     assert(failed.failedStage.contains("bronze"))
     assert(session() == before)
+  }
+
+  test("medallion layers write v2 pages, delta-encoding event_id and ts, without touching the session conf") {
+    val codecKey = "spark.sql.parquet.compression.codec"
+    val codecBefore = spark.conf.getOption(codecKey)
+    val pass = DqThresholds(negativeValues = 10000, earlyDropoff = 10000,
+      longDistance = 10000, invalidPassengers = 10000)
+    val cfg = tmpCfg().copy(writeGold = true, writeSilver = true, thresholds = pass)
+    val outcome = Runner.run(spark, cfg)
+    assert(outcome.stages.map(_.name) == Seq("bronze", "silver", "dq", "gold"))
+    assert(outcome.failedStage.isEmpty)
+    val layers = Seq(cfg.bronzePath, cfg.silverPath, cfg.silverPath + "_clean", cfg.goldPath)
+    for (layer <- layers) {
+      val parts = parquetParts(layer)
+      assert(parts.nonEmpty, layer)
+      parts.foreach { f =>
+        val cols = footerColumns(f)
+        assert(cols.values.forall(_._2), s"$f has v1 pages: $cols")
+        if (layer != cfg.goldPath) for (c <- Seq("event_id", "ts"))
+          assert(cols(c)._1 == Set(Encoding.DELTA_BINARY_PACKED), s"$f $c: ${cols(c)}")
+      }
+    }
+    assert(spark.conf.getOption(codecKey) == codecBefore)
+    assert(spark.conf.getOption("parquet.writer.version").isEmpty)
+    assert(spark.conf.getOption("spark.hadoop.parquet.writer.version").isEmpty)
+  }
+
+  test("v2 output reads back row-identical under both parquet readers, also mixed with v1 files") {
+    val dir = Files.createTempDirectory("graft_v2").toString
+    // 20 000 distinct 68-byte strings outgrow the 1 MB dictionary page,
+    // so that column falls back from the dictionary to DELTA_BYTE_ARRAY
+    val df = spark.range(20000).select(
+      when(col("id") % 7 === 0, lit(null)).otherwise(col("id") * 3).as("maybe_long"),
+      concat(lit("key-"), sha2(col("id").cast("string"), 256)).as("wide_string"),
+      (col("id") * 0.37 - 11.5).as("d"),
+      timestamp_micros(col("id") * 1000003L + 1704067200000000L).as("ts"),
+      timestamp_micros(col("id") * 999983L + 1704067200000000L).cast("timestamp_ntz").as("ts_ntz"))
+    assert(writeCounted(df)(_.parquet(s"$dir/t")) == 20000L)
+    val cols = parquetParts(s"$dir/t").map(footerColumns)
+    assert(cols.forall(_.values.forall(_._2)))
+    assert(cols.exists(_("wide_string")._1.contains(Encoding.DELTA_BYTE_ARRAY)), cols)
+    underBothReaders { on =>
+      val back = spark.read.parquet(s"$dir/t")
+      assert(back.exceptAll(df).isEmpty, s"vectorized=$on")
+      assert(df.exceptAll(back).isEmpty, s"vectorized=$on")
+    }
+
+    // a v2 append onto a silver the default (v1) writer wrote
+    val cfg = tmpCfg().copy(silverMode = "append")
+    BronzeIngest.run(graft.Tables.events(spark, cfg.rawPath), cfg)
+    def silverRows = SilverClean.transform(spark.read.parquet(cfg.bronzePath))
+    silverRows.coalesce(cfg.silverPartitions).write.parquet(cfg.silverPath)
+    val v1Files = parquetParts(cfg.silverPath).toSet
+    assert(v1Files.forall(f => !footerColumns(f)("event_id")._2))
+    assert(SilverClean.run(spark, cfg)("rows") == 1000L)
+    val v2Files = parquetParts(cfg.silverPath).filterNot(v1Files)
+    assert(v2Files.nonEmpty && v2Files.forall(f => footerColumns(f)("event_id")._2))
+    val expected = silverRows.drop("silver_loaded_at")
+    val twice = expected.unionAll(expected)
+    underBothReaders { on =>
+      val mixed = spark.read.parquet(cfg.silverPath).drop("silver_loaded_at")
+      assert(mixed.count() == 2000L, s"vectorized=$on")
+      assert(mixed.exceptAll(twice).isEmpty, s"vectorized=$on")
+      assert(twice.exceptAll(mixed).isEmpty, s"vectorized=$on")
+    }
   }
 
   test("single-stage runs compose into the full pipeline (O3 DAG task boundaries)") {
