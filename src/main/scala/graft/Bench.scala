@@ -18,6 +18,45 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   import scala.util.control.NonFatal
 
+  /** The session every timed run uses (this main and `tools/Profile`):
+    * `local[SPARK_GRAFT_CPUS]` (default 4) with as many shuffle partitions.
+    */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.files.maxPartitionBytes", "2m")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  // Single-JVM hygiene between queries (round-4 verdict #4: the tail of a
+  // full r4 bench inflated 2.26× on UNCHANGED queries while the same
+  // binary got faster locally — block-manager residue across 2×88 query
+  // executions in one JVM was the prime suspect). clearCache drops any
+  // CacheManager entries; the persistent-RDD sweep frees localCheckpoint
+  // blocks (the iterative components queries) that clearCache can't see.
+  // INVARIANT: the sweep unpersists ALL persistent RDDs, including
+  // localCheckpoints that cannot be recomputed once dropped — safe only
+  // because every query fully materializes (noop sink) before the sweep
+  // runs. A design that caches data ACROSS queries must not reuse this.
+  def sweep(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    // Force a collection OUTSIDE the timed region: 100+ queries in one
+    // JVM tenure enough garbage that a later query pays a prior query's
+    // GC inside its own timing (r8: q106 measured 3.2 s in-bench vs
+    // 1.7 s isolated; the r7-code rerun swung the same way on other
+    // sub-second queries). Standard between-units bench hygiene — the
+    // timed run still pays for all allocation it causes itself.
+    System.gc()
+  }
+
   /** Median-of-5 ms for a fixed 100M-step xorshift spin, after a JIT
     * warmup rep. Emitted as "cal_spin_ms" so cross-round totals can be
     * normalized for host speed from the artifacts alone: round 8's VM ran
@@ -44,49 +83,18 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val (calMs, _) = calibrateSpinMs()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", "2m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
 
     def materialize(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
 
-    // Single-JVM hygiene between queries (round-4 verdict #4: the driver's
-    // r4 bench tail inflated 2.26× on UNCHANGED queries while the same
-    // binary got faster locally — block-manager residue across 2×88 query
-    // executions in one JVM was the prime suspect). clearCache drops any
-    // CacheManager entries; the persistent-RDD sweep frees localCheckpoint
-    // blocks (the iterative components queries) that clearCache can't see.
-    // INVARIANT: the sweep unpersists ALL persistent RDDs, including
-    // localCheckpoints that cannot be recomputed once dropped — safe only
-    // because every query fully materializes (noop sink) before the sweep
-    // runs. A design that caches data ACROSS queries must not reuse this.
-    def sweep(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      // Force a collection OUTSIDE the timed region: 100+ queries in one
-      // JVM tenure enough garbage that a later query pays a prior query's
-      // GC inside its own timing (r8: q106 measured 3.2 s in-bench vs
-      // 1.7 s isolated; the r7-code rerun swung the same way on other
-      // sub-second queries). Standard between-units bench hygiene — the
-      // timed run still pays for all allocation it causes itself.
-      System.gc()
-    }
-
     val names = SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>
       try materialize(name)
       catch { case NonFatal(_) => () }
-      sweep()
+      sweep(spark)
     }
     // SPARK_GRAFT_REPS > 1 repeats each timed query and reports the MEDIAN
     // second (r5 verdict #3: a handful of per-query numbers moved ~2x on
@@ -109,7 +117,7 @@ object Bench {
         // discrepancy diagnosable from the artifact alone (GC pressure shows
         // up as a climbing floor across the alphabetical run order)
         val heapMb = (rt.totalMemory - rt.freeMemory) / (1024 * 1024)
-        sweep()
+        sweep(spark)
         (sec, ok, heapMb)
       }
       (name, median(runs.map(_._1)), runs.forall(_._2), runs.last._3)

@@ -470,20 +470,6 @@ object Dedup {
         (col("exact_dup_of").isNull && col("batch_dup_of").isNull &&
           col("near_dup_of").isNull).cast("long").as("keep"))
 
-  /** MinHash signatures from the inverted index: sig[j] = min over shingles
-    * of xxhash64(j, sh) — k independent families by seeding with j, computed
-    * as k plain `min` aggregates in ONE hash-agg pass (fully codegen'd; no
-    * per-row array building).
-    */
-  def minhashSignatures(docs: DataFrame, k: Int = 128, n: Int = 3): DataFrame = {
-    val index = shingleIndex(docs, n)
-    val mins = (0 until k).map(j => min(xxhash64(lit(j), col("sh"))).as(s"m$j"))
-    index.groupBy(col("doc_id"))
-      .agg(mins.head, mins.tail: _*)
-      .select(col("doc_id"),
-        array((0 until k).map(j => col(s"m$j")): _*).as("sig"))
-  }
-
   /** Near-dup pairs via LSH banding + exact-Jaccard verification. Bands of
     * r = k/bands rows; two docs collide if any band hashes equal. Collision
     * probability 1-(1-J^r)^bands — with k=128, bands=32 (r=4) a J=0.8 pair
@@ -655,7 +641,8 @@ object Dedup {
         (e, l)
       } else (edgesPlain, labelsPlain)
     var labels = labelsInit
-    // GIANT-COMPONENT demotion (measured, ComponentsProbe third experiment):
+    // GIANT-COMPONENT demotion (measured on a 4M-node half-giant graph,
+    // QUERIES.md "Giant-component probe"):
     // once one component holds a large share of the nodes, the step join's
     // component-keyed probe concentrates on a single hot label. The pinned
     // path then LOSES — declaring the checkpoint partitioning removes the

@@ -30,9 +30,8 @@ import graft.sources.Bucketing
   *    batch_id partition per micro-batch, so probe cost grew with batch
   *    COUNT. [[compactTable]] rewrites a table's batch partitions into
   *    ONE generation partition (tombstoned rows physically purged,
-  *    bucketing preserved, move-then-rename swap — the
-  *    pipeline/Compaction discipline), after which the probe reads
-  *    O(buckets) files again. The fold point is recorded in the index
+  *    bucketing preserved, move-then-rename swap), after which the
+  *    probe reads O(buckets) files again. The fold point is recorded in the index
   *    meta as `compacted_through`; the streaming append-if-absent probe
   *    treats every batch_id at or below it as already present, so an
   *    at-least-once replay that predates the compaction cannot

@@ -39,7 +39,7 @@ object OrderStats {
     * checkpoint(s) a frame returned by this operator references — call
     * after materializing the result, or a caller looping
     * [[percentilesDisc]]/[[bandCountSum]] accumulates one domain-bounded
-    * RDD per call until a global sweep (Bench/Verify/TimeOne) or the
+    * RDD per call until a global sweep (Bench/Verify/Profile) or the
     * GC-triggered ContextCleaner finds them.
     *
     * Unlike [[Dedup.release]] (ownership-only traversal: a plain
@@ -92,7 +92,7 @@ object OrderStats {
     // fact-scan stages the moment the frame is BUILT, r7 verdict #2),
     // the deferred form launches zero jobs until an action needs it —
     // explain-only consumers are safe by construction. Blocks are freed
-    // with [[release]]; Bench/Verify/TimeOne's persistent-RDD sweep also
+    // with [[release]]; Bench/Verify/Profile's persistent-RDD sweep also
     // reclaims them.
     //
     // The checkpoint still hides the fact-side subtree behind a

@@ -243,12 +243,12 @@ object PqQueries {
         // LEARNED coarse quantizer (r10 verdict #1): 2 exact Lloyd
         // iterations over the corpus instead of raw seeded Gaussians —
         // same deterministic int64 machinery as the residual codebook
-        // fit. Measured at sf0.1 (IvfProbe, 20-query mean):
+        // fit. Measured at sf0.1 (20-query mean, QUERIES.md r10):
         // learning lifts nProbe=4 recall 0.50→0.58 and worst-query
         // recall 0.10→0.40; the corpus is near-isotropic, so list
         // coverage stays the dominant recall dial — exactly the real-IVF
         // trade. r15 (verdict #4): nProbe 6→8 of 16 lists, measured
-        // coverage 0.715→0.805 at sf0.1 (IvfProbe) and ivf_pq recall
+        // coverage 0.715→0.805 at sf0.1 (20-query mean) and ivf_pq recall
         // 0.62→0.70; the stored twins (q160/q177) absorb the extra two
         // lists via (batch_id, list_id) directory pruning, the recompute
         // pays ~33% more ADC rows — the priced recall-vs-time re-pin,

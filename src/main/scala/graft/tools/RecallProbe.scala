@@ -78,7 +78,7 @@ object RecallProbe {
     // 10-element set is a coin-flip-grade sample (the r10 floors of
     // 0.20/0.30 existed to absorb that variance); the mean tightens the
     // claim to what the operator actually delivers. r15: probe 8/16
-    // lists (was 6 — IvfProbe measured coverage 0.64 -> 0.80 at sf0.1,
+    // lists (was 6 — measured coverage 0.64 -> 0.80 at sf0.1,
     // the r14 verdict #4 raise; recall IS list coverage for IVF, and
     // the stored layouts absorb the extra lists via directory pruning),
     // floors raised 0.60 -> 0.70 (ivf, measured 0.800) and

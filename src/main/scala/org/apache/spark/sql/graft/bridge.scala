@@ -43,9 +43,6 @@ private[graft] final class DeferredCheckpointRDD(
     target
   }
 
-  /** True once a job has forced the checkpoint (diagnostics/tests). */
-  def isMaterialized: Boolean = this.synchronized(target != null)
-
   /** Free the checkpoint's block-manager storage and reset to the
     * unbuilt state; the next action over this RDD recomputes from the
     * original plan. Safe to call any time no job over it is in flight.

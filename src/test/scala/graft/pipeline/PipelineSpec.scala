@@ -192,22 +192,6 @@ class PipelineSpec extends AnyFunSuite {
       .collect()(0).getLong(0) == 1L)
   }
 
-  test("metrics listener records action durations and output rows") {
-    val rec = Metrics.attach(spark)
-    try {
-      graft.Tables.events(spark, sf0001).count()
-      val deadline = System.currentTimeMillis() + 30000
-      while (rec.entries.isEmpty && System.currentTimeMillis() < deadline)
-        Thread.sleep(100)
-      assert(rec.entries.nonEmpty)
-      assert(rec.entries.exists(e => e.action == "count" && !e.failed))
-      val path = Files.createTempDirectory("graft_metrics").toString + "/metrics.jsonl"
-      Metrics.dump(rec, path)
-      val body = new String(Files.readAllBytes(java.nio.file.Paths.get(path)))
-      assert(body.contains("\"action\":\"count\""))
-    } finally Metrics.detach(spark, rec)
-  }
-
   test("full runner: stages, logs, artifact, exit codes (run_full_pipeline.ps1)") {
     val cfg = tmpCfg().copy(writeSilver = true,
       thresholds = DqThresholds(earlyDropoff = 0, longDistance = 0,

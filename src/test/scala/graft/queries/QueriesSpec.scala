@@ -1071,4 +1071,29 @@ class QueriesSpec extends AnyFunSuite {
     assert((sq8Top & exactTop).size >= 8,
       s"overlap ${(sq8Top & exactTop).size}/10")
   }
+
+  test("Profile counts the timed run only: plans built after it add no jobs, one line per job") {
+    // q34 checkpoints its signature frame eagerly, so building the frame
+    // (as --plans does, twice) launches jobs of its own
+    val q = "q34_docs_minhash_neardup"
+    def profile(jobs: Boolean, plans: Option[String]): Seq[String] = {
+      val out = Seq.newBuilder[String]
+      graft.tools.Profile.run(spark, sf0001, Seq(q), reps = 1, jobs, plans)(out += _)
+      out.result()
+    }
+    def jobsOf(lines: Seq[String]): Int = {
+      val head = lines.find(_.startsWith(s"PROFILE $q ")).getOrElse(fail(lines.mkString("\n")))
+      "jobs=(\\d+)".r.findFirstMatchIn(head).get.group(1).toInt
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_profile")
+    val traced = profile(jobs = true, plans = None)
+    val planned = profile(jobs = false, plans = Some(dir.toString))
+    assert(jobsOf(traced) > 0)
+    assert(jobsOf(planned) == jobsOf(traced), (traced ++ planned).mkString("\n"))
+    assert(traced.count(_.startsWith("job=")) == jobsOf(traced), traced.mkString("\n"))
+    Seq(s"$q.txt", s"${q}_unshared.txt").foreach { f =>
+      assert(new String(java.nio.file.Files.readAllBytes(dir.resolve(f)))
+        .startsWith("== Physical Plan =="), f)
+    }
+  }
 }
