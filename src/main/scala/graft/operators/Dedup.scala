@@ -252,12 +252,12 @@ object Dedup {
       n: Int = 3, nBuckets: Int = 8): Unit = {
     import graft.sources.Bucketing
     val (postings, sizes, exact) = corpusIndexSlices(corpus, n)
-    Bucketing.writeBucketed(postings,
-      s"${tablePrefix}_postings", s"$path/postings", "sh", nBuckets)
-    Bucketing.writeBucketed(sizes,
-      s"${tablePrefix}_sizes", s"$path/sizes", "doc_id", nBuckets)
-    Bucketing.writeBucketed(exact,
-      s"${tablePrefix}_exact", s"$path/exact", "h", nBuckets)
+    Bucketing.writeBucketedPartitionedBy(postings,
+      s"${tablePrefix}_postings", s"$path/postings", Nil, "sh", nBuckets)
+    Bucketing.writeBucketedPartitionedBy(sizes,
+      s"${tablePrefix}_sizes", s"$path/sizes", Nil, "doc_id", nBuckets)
+    Bucketing.writeBucketedPartitionedBy(exact,
+      s"${tablePrefix}_exact", s"$path/exact", Nil, "h", nBuckets)
   }
 
   /** [[crossJaccardMatches]] against a STORED index from
@@ -485,15 +485,16 @@ object Dedup {
     // feeding the aggregation, so the 129-function final aggregate
     // (128 mins + the collect_set) still re-EXECUTED in every consumer
     // branch — banding plus both candidate-set joins, 3 evaluations of
-    // the most expensive operator in the query. The checkpoint holds one
-    // doc-sized frame (sig + sorted shingle set per doc) and every branch
-    // reads its blocks. Lifetime: the consumer's obligation (the
+    // the most expensive operator in the query. The DEFERRED checkpoint
+    // (the OrderStats form) holds one doc-sized frame (sig + sorted
+    // shingle set per doc), filled by the query's own action, so building
+    // the frame runs no job. Lifetime: the consumer's obligation (the
     // lshScoredPairs contract — Bench/Verify sweep between queries,
     // ContextCleaner in long sessions).
     val mins = (0 until k).map(j => min(xxhash64(lit(j), col("sh"))).as(s"m$j"))
-    val aggd = shingleIndex(docs, n).groupBy(col("doc_id"))
-      .agg(mins.head, (mins.tail :+ sort_array(collect_set(col("sh"))).as("shs")): _*)
-      .localCheckpoint(true)
+    val aggd = org.apache.spark.sql.graft.bridge.deferredLocalCheckpoint(
+      shingleIndex(docs, n).groupBy(col("doc_id"))
+        .agg(mins.head, (mins.tail :+ sort_array(collect_set(col("sh"))).as("shs")): _*))
     val sigs = aggd.select(col("doc_id"),
       array((0 until k).map(j => col(s"m$j")): _*).as("sig"))
     // explode the band index (trivial generator), then slice+hash one band

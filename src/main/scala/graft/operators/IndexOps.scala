@@ -130,8 +130,8 @@ object IndexOps {
     }
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[Row], tombstoneSchema(keyCol))
-    Bucketing.writeBucketedPartitioned(empty, table, path,
-      "batch_id", keyCol, nBuckets)
+    Bucketing.writeBucketedPartitionedBy(empty, table, path,
+      Seq("batch_id"), keyCol, nBuckets)
   }
 
   /** Append a deletion decision (any frame with a `keyCol` column — a
@@ -323,26 +323,20 @@ object IndexOps {
     * leaves the full previous generation at `__old` — [[recoverSwap]]
     * restores it MECHANICALLY (run from every reattach path, and at the
     * top of the next swap attempt), so the documented recovery is code,
-    * not a comment (advisor r13). The write repartitions ALIGNED WITH
-    * THE BUCKET HASH (HashPartitioning over the bucket column with
-    * nBuckets partitions is exactly the bucket-id expression), so each
-    * task holds one bucket and the rewrite lands ONE file per bucket per
-    * partition directory — without it the bucketed write emits a file
-    * per (source task × bucket) and a "compacted" table had MORE files
-    * than before.
+    * not a comment (advisor r13). The write lands one file per bucket
+    * per partition directory ([[Bucketing]]'s one layout), so a
+    * compacted table has O(buckets) files.
     */
   def swapIn(spark: SparkSession, tableName: String, path: String,
       df: DataFrame, partCols: Seq[(String, String)], keyCol: String,
       nBuckets: Int): Unit = {
     recoverSwap(spark, tableName, path)
-    val laidOut = df.repartition(nBuckets, col(keyCol))
-    val schema = laidOut.schema
     val tmpTable = s"${tableName}__compact"
     val tmpPath = s"${path}__compact"
     val oldPath = s"${path}__old"
     spark.sql(s"DROP TABLE IF EXISTS `${tmpTable.replace("`", "``")}`")
     deleteDir(spark, tmpPath)
-    Bucketing.writeBucketedPartitionedBy(laidOut, tmpTable, tmpPath,
+    Bucketing.writeBucketedPartitionedBy(df, tmpTable, tmpPath,
       partCols.map(_._1), keyCol, nBuckets)
     // swap: external tables — DROP removes catalog entries, never files
     spark.sql(s"DROP TABLE `${tmpTable.replace("`", "``")}`")
@@ -350,7 +344,7 @@ object IndexOps {
     deleteDir(spark, oldPath)
     if (dirExists(spark, path)) moveDir(spark, path, oldPath)
     moveDir(spark, tmpPath, path)
-    Bucketing.reattachBySchema(spark, tableName, path, schema,
+    Bucketing.reattachBySchema(spark, tableName, path, df.schema,
       partCols, keyCol, nBuckets)
     deleteDir(spark, oldPath)
   }

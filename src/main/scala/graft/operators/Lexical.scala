@@ -87,12 +87,12 @@ object Lexical {
     import spark.implicits._
     val (postings, doclen, stats) = lexIndexSlices(
       docs.select(col("doc_id"), col("text")), IndexOps.SeedBatchId)
-    Bucketing.writeBucketedPartitioned(postings,
-      s"${tablePrefix}_postings", s"$path/postings", "batch_id", "token", nBuckets)
-    Bucketing.writeBucketedPartitioned(doclen,
-      s"${tablePrefix}_doclen", s"$path/doclen", "batch_id", "doc_id", nBuckets)
-    Bucketing.writeBucketedPartitioned(stats,
-      s"${tablePrefix}_stats", s"$path/stats", "batch_id", "n_docs", nBuckets = 1)
+    Bucketing.writeBucketedPartitionedBy(postings,
+      s"${tablePrefix}_postings", s"$path/postings", Seq("batch_id"), "token", nBuckets)
+    Bucketing.writeBucketedPartitionedBy(doclen,
+      s"${tablePrefix}_doclen", s"$path/doclen", Seq("batch_id"), "doc_id", nBuckets)
+    Bucketing.writeBucketedPartitionedBy(stats,
+      s"${tablePrefix}_stats", s"$path/stats", Seq("batch_id"), "n_docs", nBuckets = 1)
     IndexOps.initTombstones(spark, tablePrefix, s"$path/tombstones",
       nBuckets, keyCol = "doc_id")
     Seq((LexIndexFormat, IndexOps.NeverCompacted, IndexOps.NeverCompacted))

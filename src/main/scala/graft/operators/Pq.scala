@@ -608,10 +608,10 @@ object Pq {
     val cbs = fit(emb, iters, seed)
     val e = IndexOps.widenedSource(emb)
     val (codes, vs) = pqIndexSlices(e, -1L, cbs)
-    Bucketing.writeBucketedPartitioned(codes,
-      s"${tablePrefix}_codes", s"$path/codes", "batch_id", "vec_id", nBuckets)
-    Bucketing.writeBucketedPartitioned(vs,
-      s"${tablePrefix}_vecs", s"$path/vecs", "batch_id", "vec_id", nBuckets)
+    Bucketing.writeBucketedPartitionedBy(codes,
+      s"${tablePrefix}_codes", s"$path/codes", Seq("batch_id"), "vec_id", nBuckets)
+    Bucketing.writeBucketedPartitionedBy(vs,
+      s"${tablePrefix}_vecs", s"$path/vecs", Seq("batch_id"), "vec_id", nBuckets)
     IndexOps.initTombstones(spark, tablePrefix, s"$path/tombstones", nBuckets)
     initMonitor(spark, tablePrefix, path)
     // build-time quantization MSE — the staleness baseline every
@@ -633,8 +633,8 @@ object Pq {
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       IndexOps.MonitorSchema)
-    Bucketing.writeBucketedPartitioned(empty, s"${tablePrefix}_monitor",
-      s"$path/monitor", "batch_id", "mse_micros", nBuckets = 1)
+    Bucketing.writeBucketedPartitionedBy(empty, s"${tablePrefix}_monitor",
+      s"$path/monitor", Seq("batch_id"), "mse_micros", nBuckets = 1)
   }
 
   /** One maintenance batch's staleness-monitor row: the delta's
@@ -668,7 +668,7 @@ object Pq {
         lit(batchId).as("batch_id"))
 
   /** Re-register the stored PQ index in a fresh session catalog from its
-    * surviving files (restart story — Bucketing.reattach semantics).
+    * surviving files (restart story — Bucketing.reattachBy semantics).
     * Tombstone/monitor tables attach with DECLARED schemas (legitimately
     * empty until the first deletion/stream batch).
     */
@@ -865,8 +865,8 @@ object Pq {
     Bucketing.writeBucketedPartitionedBy(codes,
       s"${tablePrefix}_codes", s"$path/codes", Seq("batch_id", "list_id"),
       "vec_id", nBuckets)
-    Bucketing.writeBucketedPartitioned(vs,
-      s"${tablePrefix}_vecs", s"$path/vecs", "batch_id", "vec_id", nBuckets)
+    Bucketing.writeBucketedPartitionedBy(vs,
+      s"${tablePrefix}_vecs", s"$path/vecs", Seq("batch_id"), "vec_id", nBuckets)
     IndexOps.initTombstones(spark, tablePrefix, s"$path/tombstones", nBuckets)
     initMonitor(spark, tablePrefix, path)
     // build-time RESIDUAL quantization MSE — IVF-PQ's ADC error source

@@ -150,14 +150,14 @@ object SemDedup {
     import spark.implicits._
     val cs = Clustering.centroids(k, dim)
     val members = memberSlice(emb, IndexOps.SeedBatchId, cs)
-    Bucketing.writeBucketedPartitioned(members, s"${tablePrefix}_members",
-      s"$path/members", "batch_id", "cluster_id", nBuckets)
+    Bucketing.writeBucketedPartitionedBy(members, s"${tablePrefix}_members",
+      s"$path/members", Seq("batch_id"), "cluster_id", nBuckets)
     IndexOps.initTombstones(spark, tablePrefix, s"$path/tombstones", nBuckets)
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       IndexOps.MonitorSchema)
-    Bucketing.writeBucketedPartitioned(empty, s"${tablePrefix}_monitor",
-      s"$path/monitor", "batch_id", "mse_micros", nBuckets = 1)
+    Bucketing.writeBucketedPartitionedBy(empty, s"${tablePrefix}_monitor",
+      s"$path/monitor", Seq("batch_id"), "mse_micros", nBuckets = 1)
     val buildMse = buildMseOf(
       IndexOps.readVecs(spark, s"${tablePrefix}_members"), cs)
     writeMeta(spark, tablePrefix, path, k, dim, cs, buildMse, RuleDot,

@@ -427,10 +427,10 @@ object Similarity {
     import spark.implicits._
     val e = IndexOps.widenedSource(emb)
     val (buckets, vecs) = annIndexSlices(e, -1L, tables, bits)
-    Bucketing.writeBucketedPartitioned(buckets,
-      s"${tablePrefix}_buckets", s"$path/buckets", "batch_id", "bucket", nBuckets)
-    Bucketing.writeBucketedPartitioned(vecs,
-      s"${tablePrefix}_vecs", s"$path/vecs", "batch_id", "vec_id", nBuckets)
+    Bucketing.writeBucketedPartitionedBy(buckets,
+      s"${tablePrefix}_buckets", s"$path/buckets", Seq("batch_id"), "bucket", nBuckets)
+    Bucketing.writeBucketedPartitionedBy(vecs,
+      s"${tablePrefix}_vecs", s"$path/vecs", Seq("batch_id"), "vec_id", nBuckets)
     IndexOps.initTombstones(spark, tablePrefix, s"$path/tombstones", nBuckets)
     Seq((AnnIndexFormat, tables, bits, IndexOps.NeverCompacted, IndexOps.NeverCompacted))
       .toDF("format", "tables", "bits", "compacted_through", "ts_compacted_through")
@@ -439,7 +439,7 @@ object Similarity {
   }
 
   /** Re-register the stored ANN index in a fresh session catalog from its
-    * surviving files (Bucketing.reattach semantics — restart story). The
+    * surviving files (Bucketing.reattachBy semantics — restart story). The
     * tombstone table attaches with a DECLARED schema: it is legitimately
     * empty until the first deletion, and an empty directory has nothing
     * to infer from.

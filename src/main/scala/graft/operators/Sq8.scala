@@ -203,8 +203,8 @@ object Sq8 {
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       Sq8MonitorSchema)
-    Bucketing.writeBucketedPartitioned(empty, s"${tablePrefix}_monitor",
-      s"$path/monitor", "batch_id", "clamp_ppm", nBuckets = 1)
+    Bucketing.writeBucketedPartitionedBy(empty, s"${tablePrefix}_monitor",
+      s"$path/monitor", Seq("batch_id"), "clamp_ppm", nBuckets = 1)
   }
 
   private def writeMeta(spark: SparkSession, tablePrefix: String,
@@ -233,10 +233,10 @@ object Sq8 {
     // commit record, and a crash before it leaves a rebuildable stub
     @volatile var mse = 0L
     Par.inParallel(Seq(
-      () => Bucketing.writeBucketedPartitioned(codes,
-        s"${tablePrefix}_codes", s"$path/codes", "batch_id", "vec_id", nBuckets),
-      () => Bucketing.writeBucketedPartitioned(vs,
-        s"${tablePrefix}_vecs", s"$path/vecs", "batch_id", "vec_id", nBuckets),
+      () => Bucketing.writeBucketedPartitionedBy(codes,
+        s"${tablePrefix}_codes", s"$path/codes", Seq("batch_id"), "vec_id", nBuckets),
+      () => Bucketing.writeBucketedPartitionedBy(vs,
+        s"${tablePrefix}_vecs", s"$path/vecs", Seq("batch_id"), "vec_id", nBuckets),
       () => IndexOps.initTombstones(spark, tablePrefix, s"$path/tombstones",
         nBuckets),
       () => initMonitor(spark, tablePrefix, path),

@@ -107,12 +107,12 @@ object DedupStream {
     val spark = docs.sparkSession
     import spark.implicits._
     val (postings, sizes, exact) = indexSlices(docs, -1L, n)
-    Bucketing.writeBucketedPartitioned(postings,
-      s"${tablePrefix}_postings", s"$path/postings", "batch_id", "sh", nBuckets)
-    Bucketing.writeBucketedPartitioned(sizes,
-      s"${tablePrefix}_sizes", s"$path/sizes", "batch_id", "doc_id", nBuckets)
-    Bucketing.writeBucketedPartitioned(exact,
-      s"${tablePrefix}_exact", s"$path/exact", "batch_id", "h", nBuckets)
+    Bucketing.writeBucketedPartitionedBy(postings,
+      s"${tablePrefix}_postings", s"$path/postings", Seq("batch_id"), "sh", nBuckets)
+    Bucketing.writeBucketedPartitionedBy(sizes,
+      s"${tablePrefix}_sizes", s"$path/sizes", Seq("batch_id"), "doc_id", nBuckets)
+    Bucketing.writeBucketedPartitionedBy(exact,
+      s"${tablePrefix}_exact", s"$path/exact", Seq("batch_id"), "h", nBuckets)
     IndexOps.initTombstones(spark, tablePrefix, s"$path/tombstones",
       nBuckets, keyCol = "doc_id")
     Seq((CorpusIndexFormat, n, IndexOps.NeverCompacted, IndexOps.NeverCompacted))
@@ -129,7 +129,7 @@ object DedupStream {
     * the catalog entry already exists, so it is safe to call
     * unconditionally at startup; on a persistent metastore it is pure
     * no-op. `nBuckets` must match the seed — the spec is declared, not
-    * re-verified from files (see `Bucketing.reattach`).
+    * re-verified from files (see `Bucketing.reattachBy`).
     */
   def reattachCorpusIndex(spark: SparkSession, tablePrefix: String,
       path: String, nBuckets: Int = 8): Unit = {
@@ -137,12 +137,9 @@ object DedupStream {
     import graft.sources.Bucketing
     Seq("postings", "sizes", "exact").foreach(t =>
       IndexOps.recoverSwap(spark, s"${tablePrefix}_$t", s"$path/$t"))
-    Bucketing.reattach(spark, s"${tablePrefix}_postings", s"$path/postings",
-      "batch_id", "sh", nBuckets)
-    Bucketing.reattach(spark, s"${tablePrefix}_sizes", s"$path/sizes",
-      "batch_id", "doc_id", nBuckets)
-    Bucketing.reattach(spark, s"${tablePrefix}_exact", s"$path/exact",
-      "batch_id", "h", nBuckets)
+    Seq("postings" -> "sh", "sizes" -> "doc_id", "exact" -> "h").foreach { case (t, k) =>
+      Bucketing.reattachBy(spark, s"${tablePrefix}_$t", s"$path/$t",
+        Seq("batch_id" -> "BIGINT"), k, nBuckets) }
     // lifecycle tables of the format-2 layout (a format-1 seed predating
     // them reattaches data-only and keeps its grow-only semantics)
     if (IndexOps.dirExists(spark, s"$path/tombstones"))

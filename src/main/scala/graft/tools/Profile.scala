@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.graft.bridge
 
@@ -14,10 +14,11 @@ import org.apache.spark.sql.graft.bridge
   * sweep. Per query: one warm pass, then `--reps N` (default 1) timed noop
   * materializations, each after a sweep. Prints one line per query:
   *
-  *   PROFILE <query> sec=<median> all=<s,...> jobs= stages= tasks= scanStages=
+  *   PROFILE <query> sec=<median> all=<s,...> jobs= stages= tasks= scanStages= buildJobs=
   *
   * The counters are the last timed run's, read after the listener bus is
-  * drained and before any plan is built. `--jobs` adds that run's per-job
+  * drained and before any plan is built; `buildJobs` of them ran while the
+  * frame was constructed, before its action. `--jobs` adds that run's per-job
   * and per-stage lines; `--plans DIR` writes `DIR/<query>.txt`, the
   * formatted plan of the shipped frame, and `DIR/<query>_unshared.txt`,
   * the same frame built under `spark.graft.orderstats.share=off` (the full
@@ -45,7 +46,7 @@ object Profile {
 
   def run(spark: SparkSession, sfDir: String, names: Seq[String], reps: Int,
       jobs: Boolean, plans: Option[String])(emit: String => Unit): Unit = {
-    val nJobs, nStages, nTasks, nScans = new AtomicInteger(0)
+    val nJobs, nStages, nTasks, nScans, nBuilt = new AtomicInteger(0)
     val starts = new ConcurrentHashMap[Int, (Long, String)]()
     val jobLines, stageLines = new ConcurrentLinkedQueue[(Int, String)]()
     val t0 = new AtomicLong(0L)
@@ -87,14 +88,17 @@ object Profile {
     spark.sparkContext.addSparkListener(listener)
     try names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
-      def mat(): Unit = fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      def mat(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
       try {
-        mat() // warm: JIT and stored-index builds land here, as in Bench
+        mat(fn(spark, sfDir)) // warm: JIT and stored-index builds land here, as in Bench
         graft.Bench.sweep(spark)
         val secs = (1 to reps.max(1)).map { _ =>
           reset()
           val w0 = System.nanoTime()
-          mat()
+          val df = fn(spark, sfDir)
+          bridge.drainListenerBus(spark)
+          nBuilt.set(nJobs.get)
+          mat(df)
           val sec = (System.nanoTime() - w0) / 1e9
           graft.Bench.sweep(spark)
           sec
@@ -103,7 +107,7 @@ object Profile {
         val n = secs.size
         val med = if (n % 2 == 1) secs(n / 2) else (secs(n / 2 - 1) + secs(n / 2)) / 2
         emit(f"PROFILE $name sec=$med%.3f all=${secs.map(s => f"$s%.2f").mkString(",")} " +
-          s"jobs=${nJobs.get} stages=${nStages.get} tasks=${nTasks.get} scanStages=${nScans.get}")
+          s"jobs=${nJobs.get} stages=${nStages.get} tasks=${nTasks.get} scanStages=${nScans.get} buildJobs=${nBuilt.get}")
         if (jobs) (jobLines.asScala.toSeq.sortBy(_._1) ++ stageLines.asScala.toSeq.sortBy(_._1))
           .foreach(l => emit(l._2))
         // plans only after the counters are read: building the frame runs

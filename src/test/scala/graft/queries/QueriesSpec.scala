@@ -1073,8 +1073,8 @@ class QueriesSpec extends AnyFunSuite {
   }
 
   test("Profile counts the timed run only: plans built after it add no jobs, one line per job") {
-    // q34 checkpoints its signature frame eagerly, so building the frame
-    // (as --plans does, twice) launches jobs of its own
+    // building q34's frame (as --plans does, twice) launches a job of its
+    // own: the parquet schema inference of its fixture table
     val q = "q34_docs_minhash_neardup"
     def profile(jobs: Boolean, plans: Option[String]): Seq[String] = {
       val out = Seq.newBuilder[String]
@@ -1091,6 +1091,10 @@ class QueriesSpec extends AnyFunSuite {
     assert(jobsOf(traced) > 0)
     assert(jobsOf(planned) == jobsOf(traced), (traced ++ planned).mkString("\n"))
     assert(traced.count(_.startsWith("job=")) == jobsOf(traced), traced.mkString("\n"))
+    // ...and nothing else: the signature checkpoint fills inside the action
+    val built = "buildJobs=(\\d+)".r.findFirstMatchIn(traced.head).get.group(1).toInt
+    assert(built == traced.count(l => l.startsWith("job=") && l.contains("parquet at Tables")),
+      traced.mkString("\n"))
     Seq(s"$q.txt", s"${q}_unshared.txt").foreach { f =>
       assert(new String(java.nio.file.Files.readAllBytes(dir.resolve(f)))
         .startsWith("== Physical Plan =="), f)

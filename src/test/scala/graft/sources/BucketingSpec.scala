@@ -9,15 +9,16 @@ class BucketingSpec extends AnyFunSuite {
 
   test("joining two co-bucketed tables plans with zero shuffles") {
     val base = Files.createTempDirectory("graft_bucketed").toString
-    Bucketing.writeBucketed(graft.Tables.lineitem(spark, sf0001),
-      "li_bucketed", s"$base/li", "l_orderkey", nBuckets = 4)
-    Bucketing.writeBucketed(graft.Tables.orders(spark, sf0001),
-      "o_bucketed", s"$base/o", "o_orderkey", nBuckets = 4)
+    Bucketing.writeBucketedPartitionedBy(graft.Tables.lineitem(spark, sf0001),
+      "li_bucketed", s"$base/li", Nil, "l_orderkey", nBuckets = 4)
+    Bucketing.writeBucketedPartitionedBy(graft.Tables.orders(spark, sf0001),
+      "o_bucketed", s"$base/o", Nil, "o_orderkey", nBuckets = 4)
     try {
       // force the join path (not broadcast) to show the bucketing effect
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = Bucketing.bucketedJoin(spark, "li_bucketed", "o_bucketed",
-        "l_orderkey", "o_orderkey")
+      val li = spark.table("li_bucketed")
+      val o = spark.table("o_bucketed")
+      val joined = li.join(o, li("l_orderkey") === o("o_orderkey"))
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n"))
       val plan = joined.queryExecution.executedPlan.toString
